@@ -3,36 +3,20 @@ scale): the reference's dbt `not_null` idiom extended with `unique`,
 `accepted_values`, and `relationships` (FK) checks, run through the same
 registry `build()` so failures fail the build like `dbt build`.
 
-Each check is a Catalyst plan (filter/aggregate/anti-join) — a full-table
-data test at 100 TB is itself a big query, so the shapes matter: FK checks
-are LEFT ANTI broadcast joins, uniqueness is a single hash aggregate.
+A full-table data test at 100 TB is itself a big query, so the shapes
+matter: a table's not_null/unique/accepted_values checks fold into one
+aggregate over one scan, FK checks are LEFT ANTI broadcast joins.
 """
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..registry import DataTest, Registry, accepted_values, not_null, unique
+from ..registry import (DataTest, Registry, accepted_values, not_null,
+                        relationships, unique)
 from ..session import load_table
-
-
-def relationships(column: str, parent: DataFrame, parent_key: str) -> DataTest:
-    """dbt-style FK test: every non-null child value exists in the parent
-    (LEFT ANTI join; parent side broadcast when small)."""
-
-    def check(df: DataFrame) -> int:
-        child = df.select(F.col(column).alias("__fk")).filter(
-            F.col("__fk").isNotNull()
-        )
-        missing = child.join(
-            parent.select(F.col(parent_key).alias("__fk")).distinct(),
-            "__fk",
-            "left_anti",
-        )
-        return missing.limit(1).count()
-
-    return DataTest(name=f"relationships({column}->{parent_key})", check=check)
 
 
 def build_quality_registry(sf_dir: str) -> Registry:
@@ -44,14 +28,15 @@ def build_quality_registry(sf_dir: str) -> Registry:
         def _m(r: Registry, spark: SparkSession, _n=name) -> DataFrame:
             return load_table(spark, sf_dir, _n)
 
-    # FK tests resolve the parent table lazily from the child's session,
-    # so the registry composes under any SparkSession
+    # FK tests load the parent table lazily from the session that runs the
+    # check, so the registry composes under any SparkSession
     def fk(column: str, parent_name: str, parent_key: str) -> DataTest:
-        def check(df: DataFrame) -> int:
-            parent_df = load_table(df.sparkSession, sf_dir, parent_name)
-            return relationships(column, parent_df, parent_key).check(df)
-
-        return DataTest(name=f"relationships({column}->{parent_name}.{parent_key})", check=check)
+        test = relationships(
+            column,
+            lambda: load_table(SparkSession.active(), sf_dir, parent_name),
+            parent_key,
+        )
+        return replace(test, name=f"relationships({column}->{parent_name}.{parent_key})")
 
     table_model("region", [not_null("r_regionkey"), unique("r_regionkey")])
     table_model(

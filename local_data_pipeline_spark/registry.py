@@ -26,67 +26,64 @@ natural pruning key (e.g. ``dt``).
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------- data tests
 @dataclass(frozen=True)
 class DataTest:
-    """A dbt-style data test; ``check`` returns a violation signal
-    (0 = pass, >0 = fail). Built-in checks cap the reported count at 1 —
-    they exist to GATE the build cheaply (limit(1) short-circuits the
-    scan), not to tally violations; run the model's query directly when
-    an exact count is wanted."""
+    """A dbt-style data test: ``violations()`` is an aggregate giving the
+    exact count of violating rows (0 = pass, >0 = fail) over ``rows(df)``,
+    or over the model's frame ``df`` itself. ``Registry.build`` runs all
+    tests as ONE query after the last model; ``check``/``run`` run one."""
 
     name: str
-    check: Callable[[DataFrame], int]
+    violations: Callable[[], Column]
+    rows: Callable[[DataFrame], DataFrame] | None = None
 
-    def run(self, df: DataFrame) -> int:
-        return self.check(df)
+    def check(self, df: DataFrame) -> int:
+        return (self.rows(df) if self.rows else df).agg(self.violations()).first()[0]
+
+    run = check
 
 
 def not_null(column: str) -> DataTest:
     """≙ dbt ``not_null`` (`_int_open_meteo.yml:9-16`)."""
     return DataTest(
         name=f"not_null({column})",
-        check=lambda df: df.filter(F.col(column).isNull()).limit(1).count(),
+        violations=lambda: F.count_if(F.col(column).isNull()),
     )
 
 
 def unique(columns: str | list[str]) -> DataTest:
+    """Counts rows beyond the first per key; NULL keys group together,
+    as in ``GROUP BY``."""
     cols = [columns] if isinstance(columns, str) else list(columns)
     return DataTest(
         name=f"unique({','.join(cols)})",
-        check=lambda df: (
-            df.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).count()
-        ),
+        violations=lambda: F.count(F.lit(1)) - F.count_distinct(F.struct(*cols)),
     )
 
 
 def accepted_values(column: str, values: list) -> DataTest:
     return DataTest(
         name=f"accepted_values({column})",
-        check=lambda df: (
-            df.filter(~F.col(column).isin(values) & F.col(column).isNotNull())
-            .limit(1)
-            .count()
+        violations=lambda: F.count_if(
+            ~F.col(column).isin(values) & F.col(column).isNotNull()
         ),
     )
 
 
 def no_rows_where(name: str, condition: str) -> DataTest:
-    """A dbt-style singular test: fails when any row matches ``condition``
-    (SQL boolean expression over the model's columns); count capped at 1
-    like the other built-ins."""
-    return DataTest(
-        name=name,
-        check=lambda df: df.filter(F.expr(condition)).limit(1).count(),
-    )
+    """A dbt-style singular test: counts the rows matching ``condition``
+    (SQL boolean expression over the model's columns)."""
+    return DataTest(name=name, violations=lambda: F.count_if(F.expr(condition)))
 
 
 def relationships(column: str, parent, parent_column: str) -> DataTest:
@@ -96,18 +93,20 @@ def relationships(column: str, parent, parent_column: str) -> DataTest:
     close over a registry ref). The probe is a broadcast anti join —
     dimension-sized parents never shuffle the child."""
 
-    def check(df: DataFrame) -> int:
+    def orphans(df: DataFrame) -> DataFrame:
         pdf = parent() if callable(parent) else parent
-        keys = pdf.select(F.col(parent_column).alias(column)).distinct()
+        keys = pdf.select(F.col(parent_column).alias(column))
         return (
             df.filter(F.col(column).isNotNull())
             .select(column)
             .join(F.broadcast(keys), column, "left_anti")
-            .limit(1)
-            .count()
         )
 
-    return DataTest(name=f"relationships({column}->{parent_column})", check=check)
+    return DataTest(
+        name=f"relationships({column}->{parent_column})",
+        violations=lambda: F.count(F.lit(1)),
+        rows=orphans,
+    )
 
 
 # -------------------------------------------------------------------- models
@@ -142,6 +141,14 @@ class BuildResult:
     @property
     def ok(self) -> bool:
         return all(v == 0 for v in self.test_failures.values())
+
+
+class DataTestsFailed(AssertionError):
+    """A failed ``build``: ``results`` holds every model's BuildResult."""
+
+    def __init__(self, message: str, results: list[BuildResult]) -> None:
+        super().__init__(message)
+        self.results = results
 
 
 class Registry:
@@ -285,7 +292,9 @@ class Registry:
         database: str | None = None,
     ) -> list[BuildResult]:
         """≙ ``dbt build`` (dbt_defs.py:27): materialize in topo order, then
-        run data tests; a test failure raises after all models have run."""
+        run every model's data tests as one query; a test failure raises
+        after all models have run. ``BuildResult.seconds`` covers the
+        model's materialization only."""
         self._spark = spark
         self._cache.clear()
         wanted: set[str] | None = None
@@ -303,6 +312,9 @@ class Registry:
                 wanted.add(n)
                 stack.extend(self._models[n].deps)
         results: list[BuildResult] = []
+        # (result, frame, tests): a model's row-level tests fold into one
+        # aggregate over its frame; a test with its own rows gets its own
+        branches: list[tuple[BuildResult, DataFrame, list[DataTest]]] = []
         for name in self.topo_order():
             if wanted is not None and name not in wanted:
                 continue
@@ -312,23 +324,32 @@ class Registry:
             rows: int | None = None  # rows written (observed on the write job)
             if m.materialization == "view":
                 df.createOrReplaceTempView(name)
-            elif m.materialization == "table":
+            elif m.materialization in ("table", "incremental"):
                 target = f"{database}.{name}" if database else name
                 # a temp view left by a PREVIOUS build of this model
                 # shadows the table name — ALTER TABLE/refresh would
                 # resolve to the view and fail on a same-session rebuild
                 spark.catalog.dropTempView(name)
-                # the row count rides the write job itself (Observation),
+                mode = "overwrite"
+                incremental = m.materialization == "incremental"
+                if incremental and spark.catalog.tableExists(target):
+                    wcol = m.incremental_col
+                    prev_max = spark.table(target).agg(F.max(wcol)).collect()[0][0]
+                    if prev_max is not None:
+                        df = df.filter(F.col(wcol) > F.lit(prev_max))
+                    mode = "append"
+                # the row count (rows WRITTEN THIS RUN, dbt-style
+                # rows-affected) rides the write job itself (Observation),
                 # not a second full scan of the written table — at scale
                 # that re-scan is a whole extra pass
                 obs = Observation()
                 observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-                writer = observed.write.mode("overwrite")
+                writer = observed.write.mode(mode)
                 if m.partition_by:
                     writer = writer.partitionBy(*m.partition_by)
                 writer.saveAsTable(target)
                 rows = int(obs.get["rows"])
-                if m.description:
+                if not incremental and m.description:
                     # persist model docs on the table (≙ dbt +persist_docs,
                     # dbt_project.yml:11-13)
                     comment = m.description.replace("'", "''")[:256]
@@ -339,43 +360,33 @@ class Registry:
                 # a partitioned overwrite leaves stale file listings in the
                 # session's relation cache when the table was read earlier
                 spark.catalog.refreshTable(target)
-                persisted = spark.table(target)
-                self._cache[name] = persisted
-                persisted.createOrReplaceTempView(name)
-            elif m.materialization == "incremental":
-                target = f"{database}.{name}" if database else name
-                spark.catalog.dropTempView(name)
-                wcol = m.incremental_col
-                if spark.catalog.tableExists(target):
-                    prev_max = spark.table(target).agg(F.max(wcol)).collect()[0][0]
-                    if prev_max is not None:
-                        df = df.filter(F.col(wcol) > F.lit(prev_max))
-                    mode = "append"
-                else:
-                    mode = "overwrite"
-                # rows = rows WRITTEN THIS RUN (dbt-style rows-affected),
-                # observed on the write job — no post-write rescan
-                obs = Observation()
-                observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-                writer = observed.write.mode(mode)
-                if m.partition_by:
-                    writer = writer.partitionBy(*m.partition_by)
-                writer.saveAsTable(target)
-                rows = int(obs.get["rows"])
-                spark.catalog.refreshTable(target)
-                persisted = spark.table(target)
-                self._cache[name] = persisted
-                persisted.createOrReplaceTempView(name)
-            failures = {t.name: t.run(self._cache.get(name, df)) for t in m.tests}
-            results.append(
-                BuildResult(
-                    model=name,
-                    materialization=m.materialization,
-                    rows=rows,
-                    seconds=time.perf_counter() - t0,
-                    test_failures=failures,
-                )
+                df = self._cache[name] = spark.table(target)
+                df.createOrReplaceTempView(name)
+            result = BuildResult(
+                model=name,
+                materialization=m.materialization,
+                rows=rows,
+                seconds=time.perf_counter() - t0,
+                # filled in declared order once the test query has run
+                test_failures=dict.fromkeys(t.name for t in m.tests),
             )
+            results.append(result)
+            folded = [t for t in m.tests if t.rows is None]
+            branches += [(result, df, folded)] if folded else []
+            branches += [(result, t.rows(df), [t]) for t in m.tests if t.rows]
+        if branches:
+            # one row (branch id, counts) per branch; the union is planned
+            # once, so view subplans the branches share are reused
+            query = functools.reduce(
+                DataFrame.union,
+                (
+                    df.agg(F.lit(i), F.array(*[t.violations() for t in tests]))
+                    for i, (_, df, tests) in enumerate(branches)
+                ),
+            )
+            for i, counts in query.collect():
+                result, _, tests = branches[i]
+                result.test_failures.update(zip([t.name for t in tests], counts))
         bad = [
             f"{r.model}:{t}({n} violations)"
             for r in results
@@ -383,5 +394,5 @@ class Registry:
             if n
         ]
         if bad:
-            raise AssertionError("data tests failed: " + ", ".join(bad))
+            raise DataTestsFailed("data tests failed: " + ", ".join(bad), results)
         return results

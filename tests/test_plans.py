@@ -5,6 +5,8 @@ A failure here means a refactor changed the PHYSICAL plan for the worse
 results are still correct.
 """
 
+import os
+
 from local_data_pipeline_spark.plans.inspect import (
     broadcast_join_count,
     has_pushed_filter,
@@ -17,6 +19,7 @@ from local_data_pipeline_spark.plans.inspect import (
 from local_data_pipeline_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _df(spark, name):
@@ -476,7 +479,7 @@ def test_plan_linter_catalog_clean(spark):
     ALLOWLIST / S4_ALLOWLIST in tools/plan_lint.py."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.plan_lint import lint_queries
 
     bad = lint_queries()
@@ -489,34 +492,35 @@ def test_s4_tracer_catches_planted_collect(spark, tmp_path):
     abstract base — a base-only patch is a silent no-op, which is how
     the rule shipped broken mid-round-5). Plant a package-namespace
     helper that collects and assert it is flagged with its site."""
-    import os
+    import importlib.util
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from tools.plan_lint import trace_collects
 
-    probe = "/root/repo/local_data_pipeline_spark/_s4_probe.py"
-    with open(probe, "w") as fh:
-        fh.write("def bad_scalar(df):\n    return df.collect()[0][0]\n")
-    try:
-        import local_data_pipeline_spark._s4_probe as mod
+    # the tracer attributes a collect to any frame whose file lies under a
+    # local_data_pipeline_spark directory, so the probe is planted in one
+    # under tmp_path instead of in the source tree
+    probe = tmp_path / "local_data_pipeline_spark" / "_s4_probe.py"
+    probe.parent.mkdir()
+    probe.write_text("def bad_scalar(df):\n    return df.collect()[0][0]\n")
+    spec = importlib.util.spec_from_file_location("_s4_probe", probe)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
 
-        with trace_collects() as findings:
-            mod.bad_scalar(spark.range(3).agg({"id": "max"}))
-        assert findings == [
-            (
-                "S4",
-                "construction-time collect at _s4_probe.py:2 in bad_scalar",
-            )
-        ]
-        # and the patch is fully unwound afterwards
-        with trace_collects() as f2:
-            pass
-        spark.range(1).collect()
-        assert f2 == []
-    finally:
-        os.remove(probe)
-        sys.modules.pop("local_data_pipeline_spark._s4_probe", None)
+    with trace_collects() as findings:
+        mod.bad_scalar(spark.range(3).agg({"id": "max"}))
+    assert findings == [
+        (
+            "S4",
+            "construction-time collect at _s4_probe.py:2 in bad_scalar",
+        )
+    ]
+    # and the patch is fully unwound afterwards
+    with trace_collects() as f2:
+        pass
+    spark.range(1).collect()
+    assert f2 == []
 
 
 def test_auc_has_no_ranking_window(spark):

@@ -6,8 +6,9 @@ factorize) and compare codes + uniques. Catches list cells, dtype-path
 divergence (HUGEINT/decimal), and NaN-ordering surprises that
 check_oracle's tuple compare may coerce away."""
 import datetime
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import numpy as np
 import pandas as pd
