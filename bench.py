@@ -21,6 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from local_data_pipeline_spark.queries import QUERIES  # noqa: E402
+from local_data_pipeline_spark.session import get_spark, release  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -191,52 +192,9 @@ def _warmup(spark) -> None:
 
 
 def main() -> None:
-    # AQE stays ON: measured A/B over the full suite at sf0.1 — ON 50.2s
-    # vs OFF 62.8s. Simple scan+agg queries pay a small stage-barrier tax,
-    # but the join-heavy dedup/similarity queries gain more from partition
-    # coalescing (32-partition shuffles of tiny data are task-overhead
-    # bound without it). Override for experiments: SPARK_GRAFT_AQE=false.
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "true")
-    from pyspark.sql import SparkSession
-
-    # Shuffle partitions: sized for the local bench data (sf0.1, ~10 MB
-    # shuffles) where 8 beats 32 (measured with locality.wait=0: heavy
-    # suite 17.0s vs 25.8s — task dispatch overhead dominates tiny
-    # partitions). At cluster scale this knob must target ~64-128 MB per
-    # partition (or rely on AQE initialPartitionNum + coalescing); it is
-    # env-overridable for that reason. locality.wait=0 removes the 3s
-    # delay-scheduling wait, which only trades data locality — meaningless
-    # in local mode and on shuffle reads.
-    # Whole-stage codegen stays ON (scale-correct default): an isolated
-    # 15-query cold A/B suggested compile cost dominates at sf0.1, but
-    # over the full 75-query suite the effect washes out (68.2s vs 68.5s
-    # — the JVM JIT and codegen fragment cache warm up across queries),
-    # so there is no local win to justify diverging from the setting a
-    # cluster run needs.
-    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", "8")
-    codegen = os.environ.get("SPARK_GRAFT_CODEGEN", "true")
-    # Local mode runs driver + all executors in ONE JVM; the 1g default heap
-    # GC-thrashes ~100 queries in (observed: late queries inflate 2-4x).
-    # 16g keeps the full suite GC-quiet on this 128 GiB box; on a cluster
-    # this is spark.executor.memory territory instead.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-    builder_aqe_off = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-        )
-        .appName("bench")
-        .config("spark.driver.memory", driver_mem)
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.locality.wait", "0")
-        .config("spark.sql.codegen.wholeStage", codegen)
-        .config("spark.sql.adaptive.enabled", aqe)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-    )
-    spark = builder_aqe_off.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    # 8 shuffle partitions: at sf0.1, task dispatch overhead dominates
+    # tiny partitions (8 beats 32, PERF.md)
+    spark = get_spark(app_name="bench", shuffle_partitions=8)
     _warmup(spark)
 
     times: dict[str, float] = {}
@@ -244,21 +202,8 @@ def main() -> None:
         t0 = time.perf_counter()
         spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         times[name] = round(time.perf_counter() - t0, 3)
-        # iterative operators localCheckpoint intermediates; those cached
-        # blocks outlive their query (Python GC holds the lineage) and by
-        # ~150 queries in the block manager + heap pressure inflates
-        # later queries 2-4x. Queries are independent — drop everything.
-        spark.catalog.clearCache()
-        # localCheckpoint blocks are RDD-level, invisible to the SQL cache
-        # manager — clearCache() alone leaves them resident. The only
-        # enumeration API is the JVM-side getPersistentRDDs; it's a
-        # private py4j handle, so guard it — on a PySpark that drops it,
-        # the bench degrades to slower late queries instead of crashing.
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception as exc:  # pragma: no cover - version drift guard
-            print(f"WARN: persistent-RDD sweep unavailable: {exc}", file=sys.stderr)
+        # queries are independent; resident blocks inflate later ones 2-4x
+        release(spark)
 
     full, line = format_bench_output(times, _sf_label(SF_DIR))
     with open(

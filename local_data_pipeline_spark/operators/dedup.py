@@ -314,22 +314,23 @@ def jaccard_pairs(
     )
     ex_b = ex.select(
         F.col(id_col).alias("id_b"),
-        *([F.col(block_by).alias("blk_b")] if block_by else []),
+        *([F.col(block_by).alias("blk")] if block_by else []),
         F.col("sh"),
     )
     if pairs is not None:
         inter = (
             pairs.join(ex_a, "id_a")
-            .join(ex_b.drop(*(["blk_b"] if block_by else [])), ["id_b", "sh"])
+            .join(ex_b.drop(*(["blk"] if block_by else [])), ["id_b", "sh"])
             .groupBy("id_a", "id_b")
             .agg(F.count("*").alias("n_inter"))
         )
     else:
-        cond = (F.col("id_a") < F.col("id_b")) & (ex_a["sh"] == ex_b["sh"])
-        if block_by:
-            cond = cond & (F.col("blk") == F.col("blk_b"))
+        # equi-join by column NAME: both sides project one frame, so an
+        # ex_a["sh"] == ex_b["sh"] condition would compare one attribute
+        # with itself and lean on the analyzer to untangle the self-join
         inter = (
-            ex_a.join(ex_b, cond)
+            ex_a.join(ex_b, ["sh", "blk"] if block_by else ["sh"])
+            .filter(F.col("id_a") < F.col("id_b"))
             .groupBy("id_a", "id_b")
             .agg(F.count("*").alias("n_inter"))
         )

@@ -236,18 +236,20 @@ def label_propagation(
     at least one in-edge (true for symmetrized edge sets).
 
     Scale: one shuffle join (labels x edges on the source) + one
-    map-side-combinable (node, label) count + one per-node MAX-STRUCT
+    map-side-combinable (node, label) count + one per-node MIN-STRUCT
     argmax per iteration — Pregel-as-joins, same as pagerank/hits
-    above. The argmax is ``max(struct(c, -label))`` (round 12): struct
-    ordering compares c first, then -label, so ties break to the
-    SMALLEST label — exactly the previous ``row_number() OVER (ORDER BY
-    c DESC, label ASC) = 1`` window, but as a partially-aggregable
+    above. The argmax is ``min(struct(-c, label))``: struct ordering
+    compares -c first (highest count wins), then the label itself, so
+    ties break to the SMALLEST label — exactly the ``row_number() OVER
+    (ORDER BY c DESC, label ASC) = 1`` window, but as a partially-aggregable
     hash aggregate instead of a sort-based window (no per-partition
     sort, and the second exchange carries one pre-merged row per
     (node, map task) instead of every (node, label) pair). No driver
     collect anywhere; labels are localCheckpoint'd (lazy) each
     iteration to stop lineage growth. Returns (node, label) after
-    ``iterations`` rounds."""
+    ``iterations`` rounds. Node ids may be of any orderable type
+    (strings, any integer including ``Long.MIN_VALUE``): only the
+    non-negative count is negated, never the label."""
     # checkpoint the edge relation ONCE (round-11): every iteration's
     # message join reads ``edges``, and an un-checkpointed edge plan —
     # for the co-purchase callers a per-basket-quadratic self-join —
@@ -272,11 +274,11 @@ def label_propagation(
         labels = (
             counts.groupBy("node")
             .agg(
-                F.max(
-                    F.struct(F.col("c"), (-F.col("label")).alias("nl"))
-                ).alias("__best")
+                F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias(
+                    "__best"
+                )
             )
-            .select("node", (-F.col("__best.nl")).alias("label"))
+            .select("node", F.col("__best.label").alias("label"))
             .localCheckpoint(eager=False)
         )
     return labels

@@ -5,8 +5,7 @@ Each spec's ``fn(spark, sf_dir) -> DataFrame`` is the Spark-first
 implementation; ``oracle`` is the ANSI-SQL twin DuckDB runs on the same
 parquet for the driver's correctness gate (row count + schema +
 order-insensitive value hash). Column aliases match on both sides.
-Specs without ``oracle`` are non-SQL-expressible (approximate / hash-banded
-ops) and get the driver's rows-only check.
+Every spec carries an oracle: ``q()`` rejects a declaration without one.
 
 Determinism rules used throughout (see functions/numeric.py):
 - double SUM/AVG go through exact decimal accumulation;
@@ -44,7 +43,7 @@ from .session import load_table
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
     tags: tuple[str, ...] = ()
     doc: str = ""
 
@@ -52,12 +51,16 @@ class QuerySpec:
 QUERIES: dict[str, QuerySpec] = {}
 
 
-def q(name: str, oracle: str | None, tags: tuple[str, ...] = ()) -> Callable:
+def q(name: str, oracle: str, tags: tuple[str, ...] = ()) -> Callable:
     def deco(fn: Callable) -> Callable:
         if name in QUERIES:
             # a second declaration would silently SHADOW the first in
             # the dict (later wins) — caught the hard way in round 10
             raise ValueError(f"duplicate query name: {name!r}")
+        if not oracle:
+            # every query is value-hash checked against its DuckDB twin;
+            # without one the correctness gate could only count its rows
+            raise ValueError(f"query {name!r} has no oracle SQL")
         QUERIES[name] = QuerySpec(
             name=name, fn=fn, oracle=oracle, tags=tags, doc=(fn.__doc__ or "").strip()
         )
@@ -77,7 +80,7 @@ def _extract(field: str):
     return lambda x: x[field]
 
 
-def _overlap(*thunks):
+def _overlap(spark: SparkSession, *thunks):
     """Run independent Spark actions from a small driver thread pool so
     the scheduler back-fills executors freed by one job's straggler tail
     with the next job's tasks (optimization-guide §2.6 — actions are
@@ -87,17 +90,18 @@ def _overlap(*thunks):
     them. CONTRACT: every shared upstream relation the thunks read must
     already be materialized (persisted + counted, or checkpointed) —
     concurrently materializing one cached parent from several jobs
-    would duplicate its work instead of sharing it. Uses
-    ``inheritable_thread_target`` so job descriptions/groups inherit
-    per the documented PySpark pattern."""
+    would duplicate its work instead of sharing it. Each thunk is wrapped
+    with ``inheritable_thread_target(spark)`` so the caller's local
+    properties (job descriptions/groups) and job tags reach the jobs it
+    fires."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    if len(thunks) == 1:
-        return [thunks[0]()]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(t)) for t in thunks]
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
         return [f.result() for f in futures]
 
 
@@ -1746,7 +1750,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# Approximate / hash-banded ops — rows-only checks (no SQL oracle)
+# Approximate / hash-banded ops
 # =====================================================================
 
 @q(
@@ -2615,6 +2619,7 @@ def pq_adc_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         # with the count's tasks. Exact counts: overlap can't change
         # either value.
         nq, n_hits_total = _overlap(
+            spark,
             lambda: qs.count(),
             lambda: approx.select("query_id", "neighbor_id")
             .join(exact, ["query_id", "neighbor_id"])
@@ -9232,7 +9237,9 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .count()
             )
 
-        hit_counts = _overlap(*[_hits_for(df) for df in method_dfs.values()])
+        hit_counts = _overlap(
+            spark, *[_hits_for(df) for df in method_dfs.values()]
+        )
         recalls = {
             m: (n / (10 * nq) if nq else 0.0)
             for m, n in zip(method_dfs, hit_counts)
@@ -10436,8 +10443,9 @@ def minhash_precision_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame
         # recall semi-join only read the now-cached relations, so they
         # overlap without duplicating upstream work. Counts are exact;
         # concurrency cannot change any value.
-        n_cand, n_truth = _overlap(cands.count, truth.count)
+        n_cand, n_truth = _overlap(spark, cands.count, truth.count)
         n_tp, found = _overlap(
+            spark,
             DD.jaccard_pairs(d, cands, shingle_k=3, threshold=0.7).count,
             truth.join(cands, ["id_a", "id_b"], "left_semi").count,
         )
@@ -18424,12 +18432,10 @@ def training_order_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ``queries()`` dict (round 2 recorded exactly the first 50 declared
 # names in CORRECTNESS_r02.json), so the prefix below is rotated each
 # round toward names never yet green in a driver CORRECTNESS file.
-# Oracle-backed entries get the full rows+schema+value-hash check;
-# rows-only entries (oracle is None) get the driver's weaker
-# rows+schema check, which is still their only driver-side
-# attestation. All remaining queries keep their original relative
-# order after the prefix and stay fully declared (bench runs
-# everything; tests/tools check every oracle).
+# Every entry gets the full rows+schema+value-hash check. All
+# remaining queries keep their original relative order after the
+# prefix and stay fully declared (bench runs everything; tests/tools
+# check every oracle).
 _PRIORITY: tuple[str, ...] = (
     # ROUND-12 ROTATION. First block: the queries whose execution this
     # optimization round changed AFTER the r11 attestation — graph
@@ -18496,13 +18502,6 @@ assert len(_PRIORITY) == 50, len(_PRIORITY)
 assert len(set(_PRIORITY)) == 50
 _missing = [n for n in _PRIORITY if n not in QUERIES]
 assert not _missing, _missing
-# Round 10 graduated the last six rows-only queries: EVERY declared
-# query now carries a value-hash oracle, so the rows-only set must
-# stay empty — a future oracle=None declaration is a regression this
-# assert catches (reinstate the every-rows-only-in-prefix rule from
-# rounds 7-9 if one ever legitimately returns).
-_all_rows_only = {n for n, s in QUERIES.items() if s.oracle is None}
-assert _all_rows_only == set(), _all_rows_only
 
 QUERIES = {
     **{name: QUERIES[name] for name in _PRIORITY},

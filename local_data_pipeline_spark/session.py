@@ -4,7 +4,7 @@ Replaces the reference's connection/catalog bootstrap
 (`/root/reference/src/dagster_pipeline/defs/open_meteo.py:40-45,62` —
 ``duckdb.connect`` + ``CREATE SCHEMA IF NOT EXISTS``) and the dbt
 cross-database attach (`/root/reference/dbt/profiles.yml:5-11`): one local
-SparkSession with UTC session time zone, AQE enabled, and logical databases
+SparkSession with UTC session time zone and logical databases
 ``raw`` / ``stg`` / ``int`` / ``pres`` in a single catalog.
 
 100 TB notes: everything here is configuration, not code — on a real cluster
@@ -15,6 +15,7 @@ and ``spark.sql.shuffle.partitions`` sized to ~2-3× total cores.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,46 +39,81 @@ DATABASES = ("raw", "stg", "intm", "pres")
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def get_spark(
+def session_conf(
     app_name: str = "local_data_pipeline_spark",
-    cpus: str | None = None,
     shuffle_partitions: int | None = None,
     warehouse_dir: str | None = None,
-) -> SparkSession:
-    """Create (or reuse) the engine SparkSession.
+) -> dict[str, str]:
+    """The one Spark configuration every engine session is built from:
+    ``local[$SPARK_GRAFT_CPUS]`` (all cores when unset).
 
-    UTC session TZ pins the reference's naive-UTC timestamp convention
-    (open_meteo.py:56); AQE handles runtime coalescing / skew joins at scale.
+    Only settings that differ from Spark's defaults are listed (AQE,
+    partition coalescing and whole-stage codegen are already on).
+    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_CPUS`` (else 32);
+    the bench, profile and plan-lint harnesses pass 8, sized for the
+    local sf0.1 data where task dispatch overhead dominates tiny
+    partitions. At cluster scale it must target ~64-128 MB per partition.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
+    env_cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     if shuffle_partitions is None:
-        env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(env_cpus) if env_cpus and env_cpus.isdigit() else 32
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
+        shuffle_partitions = int(env_cpus) if env_cpus.isdigit() else 32
+    conf = {
+        "spark.master": f"local[{env_cpus or '*'}]",
+        "spark.app.name": app_name,
         # Single-JVM local mode: the 1g default heap GC-thrashes long
         # sessions (test suite + bench run hundreds of jobs). Harmless if a
         # session already exists (config only applies at JVM launch).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        # local[N] has one executor, so every preferred location can be met
+        # at once; the 3 s delay-scheduling wait buys nothing here.
+        "spark.locality.wait": "0",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # events.parquet stores TIMESTAMP(NANOS); Spark reads it as int64 only
         # with this flag (converted back to timestamp in load_table).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-    )
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.ui.enabled": "false",
+    }
     if warehouse_dir:
-        builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
-    spark = builder.getOrCreate()
+        conf["spark.sql.warehouse.dir"] = warehouse_dir
+    return conf
+
+
+def get_spark(
+    app_name: str = "local_data_pipeline_spark",
+    shuffle_partitions: int | None = None,
+    warehouse_dir: str | None = None,
+) -> SparkSession:
+    """Create (or reuse) the engine SparkSession from :func:`session_conf`.
+
+    This is the only place a SparkSession is built. UTC session TZ pins the
+    reference's naive-UTC timestamp convention (open_meteo.py:56).
+    """
+    conf = session_conf(app_name, shuffle_partitions, warehouse_dir)
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def release(spark: SparkSession) -> int:
+    """Drop a finished query's cached and checkpointed blocks; returns how
+    many persistent RDDs were unpersisted.
+
+    localCheckpoint blocks are RDD-level, invisible to the SQL cache
+    manager, so ``clearCache()`` alone leaves them resident. The only
+    enumeration API, ``getPersistentRDDs``, is a private py4j handle: if
+    it is missing this warns (once per process, stderr) and never raises.
+    """
+    spark.catalog.clearCache()
+    try:
+        rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    except Exception as exc:  # version drift guard: degrade, do not fail
+        warnings.warn(f"persistent-RDD sweep unavailable: {exc}", RuntimeWarning)
+        return 0
+    for rdd in rdds:
+        rdd.unpersist()
+    return len(rdds)
 
 
 def ensure_databases(spark: SparkSession) -> None:

@@ -1,6 +1,6 @@
 """Semantic tests for dedup/similarity/text operators with planted
-duplicates and hand-computed expected values (rows-only driver checks
-verify determinism; these verify the operators actually FIND things)."""
+duplicates and hand-computed expected values (the oracle gate checks
+values; these verify the operators actually FIND things)."""
 
 import math
 
@@ -18,6 +18,7 @@ from local_data_pipeline_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
     minhash_near_dups,
+    minhash_signature,
     simhash_near_dups,
 )
 from local_data_pipeline_spark.operators.similarity import brute_force_topk, lsh_topk
@@ -64,6 +65,39 @@ def test_minhash_finds_planted_near_dup(spark, docs):
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0  # identical after norm
     assert (1, 3) in pairs and 0.5 < pairs[(1, 3)] < 1.0
     assert not any(4 in p or 5 in p for p in pairs)
+
+
+def _sig_sides(docs, family):
+    """Two minhash_signature frames over DISTINCT documents that share
+    doc ids (1-3 vs 4, 5 renumbered), plus each side's rows computed alone."""
+    left = docs.filter(F.col("doc_id") <= 3)
+    right = docs.filter(F.col("doc_id") >= 4).withColumn("doc_id", F.col("doc_id") - 3)
+    sides = [minhash_signature(d, hash_family=family) for d in (left, right)]
+    alone = [{r.doc_id: tuple(r.signature) for r in d.collect()} for d in sides]
+    assert alone[0] != alone[1]
+    return sides, alone
+
+
+@pytest.mark.parametrize("family", ["xxhash64", "rk_pow5"])
+def test_memoized_signatures_union_keeps_each_side(spark, docs, family):
+    """Both sides reuse one memoized Column tree (same expression ids);
+    unioned in one plan, each side's rows still equal it computed alone."""
+    (a, b), alone = _sig_sides(docs, family)
+    got = sorted((r.doc_id, tuple(r.signature)) for r in a.union(b).collect())
+    assert got == sorted([*alone[0].items(), *alone[1].items()])
+
+
+@pytest.mark.parametrize("family", ["xxhash64", "rk_pow5"])
+def test_memoized_signatures_join_keeps_each_side(spark, docs, family):
+    """Joined on doc_id in one plan, each side's signature column still
+    holds that side's own value, not the other side's."""
+    (a, b), (alone_a, alone_b) = _sig_sides(docs, family)
+    joined = a.alias("a").join(b.alias("b"), "doc_id")
+    got = {
+        r.doc_id: (tuple(r[1]), tuple(r[2]))
+        for r in joined.select("doc_id", "a.signature", "b.signature").collect()
+    }
+    assert got == {k: (alone_a[k], alone_b[k]) for k in (1, 2)}
 
 
 def test_simhash_near_dup_hamming(spark, docs):

@@ -49,10 +49,8 @@ def test_time_queries_survive_non_utc_driver_session(spark):
     oracle-identical results with the session timezone set to a
     DST-observing zone (timestamps here are ntz end-to-end, so results
     must not shift)."""
-    import duckdb
-
     from local_data_pipeline_spark.queries import QUERIES
-    from local_data_pipeline_spark.session import TABLES
+    from tools.check_oracle import check_query, duck_views
 
     from conftest import SF_DIR
 
@@ -65,22 +63,13 @@ def test_time_queries_survive_non_utc_driver_session(spark):
         "zscore_anomalies_events",
         "trailing_30d_spend",
     ]
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_views(SF_DIR)
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
         for name in time_queries:
             spec = QUERIES[name]
-            df = spec.fn(spark, SF_DIR)
-            rows = [tuple(r) for r in df.collect()]
-            res = con.sql(spec.oracle)
-            ok, msg = compare(
-                rows, df.columns, res.fetchall(), [d[0] for d in res.description]
-            )
+            ok, msg = check_query(spark, con, spec.fn, spec.oracle, SF_DIR)
             assert ok, f"{name} under America/New_York: {msg}"
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)

@@ -2,43 +2,23 @@
 DuckDB oracle at sf0.001 (fast CI form; tools/check_oracle.py runs the
 same comparison at sf0.01)."""
 
-import duckdb
 import pytest
 
 from local_data_pipeline_spark.queries import QUERIES
-from local_data_pipeline_spark.session import TABLES
+from tools.check_oracle import check_query, duck_views
 
 from conftest import SF_DIR
-
-import sys
-import os
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from tools.check_oracle import compare  # noqa: E402
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    return con
+    return duck_views(SF_DIR)
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     spec = QUERIES[name]
-    df = spec.fn(spark, SF_DIR)
-    rows = [tuple(r) for r in df.collect()]
-    if spec.oracle is None:
-        # rows-only contract: runs, deterministic across two executions
-        again = [tuple(r) for r in spec.fn(spark, SF_DIR).collect()]
-        assert sorted(map(repr, rows)) == sorted(map(repr, again))
-        return
-    res = duck.sql(spec.oracle)
-    ok, msg = compare(rows, df.columns, res.fetchall(), [d[0] for d in res.description])
+    ok, msg = check_query(spark, duck, spec.fn, spec.oracle, SF_DIR)
     assert ok, f"{name}: {msg}"
 
 

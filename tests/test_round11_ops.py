@@ -44,6 +44,25 @@ def test_label_propagation_deterministic_tiebreak(spark):
     assert got[1] == 2 and got[3] == 2
 
 
+def test_label_propagation_any_label_type(spark):
+    """The tie-break never negates the label, so string ids and the most
+    negative long (whose negation overflows under ANSI mode) both work,
+    with the same smallest-label rule as the integer path graph above."""
+    strs = spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("b", "c"), ("c", "b")], "src string, dst string"
+    )
+    got = {r.node: r.label for r in label_propagation(strs, iterations=1).collect()}
+    assert got == {"a": "b", "b": "a", "c": "b"}
+    lo = -(2**63)
+    got = {
+        r.node: r.label
+        for r in label_propagation(
+            _sym(spark, [(lo, 0), (0, 5)]), iterations=1
+        ).collect()
+    }
+    assert got == {lo: 0, 0: lo, 5: 0}
+
+
 def test_label_propagation_partition_insensitive(spark):
     """Same communities at 1 and 13 shuffle partitions (determinism at
     any parallelism is what makes the unrolled oracle possible)."""

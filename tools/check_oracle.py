@@ -2,8 +2,7 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet (default sf0.01), then compares row count,
-sorted column names, and order-insensitive values. Queries without an
-oracle get a rows-only sanity run.
+sorted column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [query ...]
 """
@@ -26,11 +25,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
 
 def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return v
-    return v
+    return "NaN" if isinstance(v, float) and math.isnan(v) else v
 
 
 def _key(row):
@@ -53,6 +48,25 @@ def compare(spark_rows, spark_cols, duck_rows, duck_cols):
     return True, f"{len(spark_rows)} rows"
 
 
+def duck_views(sf_dir: str):
+    """A DuckDB connection with every synthetic table as a view over sf_dir."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def check_query(spark, con, fn, oracle: str, sf_dir: str):
+    """Run one query on Spark and its twin on DuckDB over sf_dir and
+    compare them: (ok, message). Errors from either engine propagate."""
+    df = fn(spark, sf_dir)
+    rows = [tuple(r) for r in df.collect()]
+    res = con.sql(oracle)
+    return compare(rows, df.columns, res.fetchall(), [d[0] for d in res.description])
+
+
 def main() -> int:
     only = set(sys.argv[1:])
     # SPARK_GRAFT_ORACLE_SHUFFLE simulates a driver-owned session with a
@@ -63,11 +77,7 @@ def main() -> int:
         app_name="check_oracle",
         shuffle_partitions=int(shuffle_env) if shuffle_env else None,
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = duck_views(SF_DIR)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     # unknown names (typos, or flags this tool doesn't take, like a
@@ -81,52 +91,23 @@ def main() -> int:
             "shuffle width is SPARK_GRAFT_ORACLE_SHUFFLE)"
         )
         return 2
-    n_pass = n_fail = 0
+    n_pass = 0
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.perf_counter()
         try:
-            df = fn(spark, SF_DIR)
-            spark_cols = df.columns
-            spark_rows = [tuple(r) for r in df.collect()]
+            ok, msg = check_query(spark, con, fn, oracles[name], SF_DIR)
         except Exception as e:
-            print(f"FAIL  {name:36s} spark error: {str(e)[:200]}")
-            n_fail += 1
-            failures.append(name)
-            continue
-        dt_spark = time.perf_counter() - t0
-        if name not in oracles:
-            print(
-                f"ROWS  {name:36s} {len(spark_rows)} rows (no oracle) "
-                f"[spark {dt_spark:.1f}s]"
-            )
-            n_pass += 1
-            continue
-        t1 = time.perf_counter()
-        try:
-            res = con.sql(oracles[name])
-            duck_cols = [d[0] for d in res.description]
-            duck_rows = res.fetchall()
-        except Exception as e:
-            print(f"FAIL  {name:36s} duckdb error: {str(e)[:200]}")
-            n_fail += 1
-            failures.append(name)
-            continue
-        dt_duck = time.perf_counter() - t1
-        ok, msg = compare(spark_rows, spark_cols, duck_rows, duck_cols)
-        status = "PASS" if ok else "FAIL"
-        print(
-            f"{status}  {name:36s} {msg}  [spark {dt_spark:.1f}s duck {dt_duck:.1f}s]"
-        )
+            ok, msg = False, f"error: {str(e)[:200]}"
+        print(f"{'PASS' if ok else 'FAIL'}  {name:36s} {msg}  [{time.perf_counter() - t0:.1f}s]")
         if ok:
             n_pass += 1
         else:
-            n_fail += 1
             failures.append(name)
-    print(f"\n{n_pass} pass, {n_fail} fail" + (f": {failures}" if failures else ""))
-    return 1 if n_fail else 0
+    print(f"\n{n_pass} pass, {len(failures)} fail" + (f": {failures}" if failures else ""))
+    return 1 if failures else 0
 
 
 if __name__ == "__main__":

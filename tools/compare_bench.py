@@ -41,10 +41,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
-
 from local_data_pipeline_spark.queries import QUERIES  # noqa: E402
-from local_data_pipeline_spark.session import TABLES  # noqa: E402
+from tools.check_oracle import duck_views  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BENCH_JSON = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH_local.json")
@@ -272,16 +270,12 @@ def main() -> None:
     with open(BENCH_JSON) as f:
         spark_times = json.load(f)["queries"]
 
-    con = duckdb.connect()
+    con = duck_views(SF_DIR)
     con.execute(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
 
     rows = []
     for name, spec in QUERIES.items():
-        if spec.oracle is None or name not in spark_times:
+        if name not in spark_times:
             continue
         # warm once (catalog/IO), time the second run
         con.sql(spec.oracle).fetchall()

@@ -16,26 +16,20 @@ def main() -> None:
         "",
         "Generated by `python tools/gen_query_docs.py` from",
         "`local_data_pipeline_spark/queries.py`. Every entry is exposed via",
-        "`__spark_entry__.py queries()`; ✓oracle = has a DuckDB `oracle_sql()`",
-        "twin checked by the driver (row count + schema + order-insensitive",
-        "values); rows-only = approximate/hash-banded by design.",
+        "`__spark_entry__.py queries()` and has a DuckDB `oracle_sql()` twin",
+        "checked by the correctness gate (row count + schema + order-insensitive values).",
         "",
-        f"**{len(QUERIES)} queries — "
-        f"{sum(1 for s in QUERIES.values() if s.oracle)} oracle-matched, "
-        f"{sum(1 for s in QUERIES.values() if not s.oracle)} rows-only.**",
+        f"**{len(QUERIES)} queries, all oracle-matched.**",
         "",
-        "| query | oracle | tags | what it covers |",
-        "|---|---|---|---|",
+        "| query | tags | what it covers |",
+        "|---|---|---|",
     ]
     for name in sorted(QUERIES):
         s = QUERIES[name]
         doc = " ".join((s.doc or "").split())
         if len(doc) > 220:
             doc = doc[:217] + "..."
-        lines.append(
-            f"| `{name}` | {'✓' if s.oracle else 'rows-only'} | "
-            f"{', '.join(s.tags)} | {doc} |"
-        )
+        lines.append(f"| `{name}` | {', '.join(s.tags)} | {doc} |")
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
     with open(out, "w") as f:
         f.write("\n".join(lines) + "\n")

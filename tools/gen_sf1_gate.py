@@ -5,8 +5,7 @@ tools/gen_scaled_data.py) is what caught the round-3 scale bugs
 (recursion row limits, round() half-boundary divergence, decimal→double
 double-rounding past 2^53 micro-units). COVERAGE.md used to claim the
 sweep green in prose; this script makes the exact included/excluded
-roster a per-round artifact: every query → PASS / ROWS / FAIL /
-EXCLUDED(reason).
+roster a per-round artifact: every query → PASS / FAIL / EXCLUDED(reason).
 
 Exclusions are queries whose DUCKDB TWIN is superlinear at sf1 (the
 Spark side scales fine — each exclusion names the one-time full
@@ -107,7 +106,7 @@ def _note(s: str) -> str:
 
 #: the --only merge parser; module-level so tests can pin that any
 #: _note()-sanitized row round-trips through it
-ROW_RE = r"\| (\S+) \| (PASS|ROWS|FAIL|EXCLUDED) \| ([\d.]+) \| (.*) \|$"
+ROW_RE = r"\| (\S+) \| (PASS|FAIL|EXCLUDED) \| ([\d.]+) \| (.*) \|$"
 
 
 def main() -> int:
@@ -130,19 +129,12 @@ def main() -> int:
         )
         return 2
 
-    import duckdb
-
     import __spark_entry__ as entrymod
-    from local_data_pipeline_spark.session import TABLES, get_spark
-    from tools.check_oracle import compare
+    from local_data_pipeline_spark.session import get_spark
+    from tools.check_oracle import check_query, duck_views
 
     spark = get_spark(app_name="sf1_gate")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(args.sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     variants = _scale_variants()
@@ -157,7 +149,7 @@ def main() -> int:
             return 2
 
     rows: list[tuple[str, str, float, str]] = []  # name, status, sec, note
-    n = {"PASS": 0, "ROWS": 0, "FAIL": 0, "EXCLUDED": 0}
+    n = {"PASS": 0, "FAIL": 0, "EXCLUDED": 0}
     for name, fn in todo.items():
         if name in EXCLUDED:
             rows.append((name, "EXCLUDED", 0.0, EXCLUDED[name]))
@@ -171,33 +163,11 @@ def main() -> int:
             variant_note = " — " + variant_note
         t0 = time.perf_counter()
         try:
-            df = fn(spark, args.sf_dir)
-            spark_cols = df.columns
-            spark_rows = [tuple(r) for r in df.collect()]
+            ok, msg = check_query(
+                spark, con, fn, oracle_sql_override or oracles[name], args.sf_dir
+            )
         except Exception as e:  # noqa: BLE001 - roster records the error
-            rows.append((name, "FAIL", time.perf_counter() - t0,
-                         _note(f"spark error: {str(e)[:160]}" + variant_note)))
-            n["FAIL"] += 1
-            print(f"FAIL  {name} (spark)")
-            continue
-        if name not in oracles:
-            dt = time.perf_counter() - t0
-            rows.append((name, "ROWS", dt,
-                         f"{len(spark_rows)} rows (rows-only by design)"))
-            n["ROWS"] += 1
-            print(f"ROWS  {name} [{dt:.1f}s]")
-            continue
-        try:
-            res = con.sql(oracle_sql_override or oracles[name])
-            duck_cols = [d[0] for d in res.description]
-            duck_rows = res.fetchall()
-        except Exception as e:  # noqa: BLE001
-            rows.append((name, "FAIL", time.perf_counter() - t0,
-                         _note(f"duckdb error: {str(e)[:160]}" + variant_note)))
-            n["FAIL"] += 1
-            print(f"FAIL  {name} (duckdb)")
-            continue
-        ok, msg = compare(spark_rows, spark_cols, duck_rows, duck_cols)
+            ok, msg = False, f"error: {str(e)[:160]}"
         dt = time.perf_counter() - t0
         rows.append((name, "PASS" if ok else "FAIL", dt,
                      _note((msg if ok else msg[:160]) + variant_note)))
@@ -219,7 +189,7 @@ def main() -> int:
         for r in rows:
             existing[r[0]] = r
         rows = [existing[name] for name in qs if name in existing]
-        n = {"PASS": 0, "ROWS": 0, "FAIL": 0, "EXCLUDED": 0}
+        n = {"PASS": 0, "FAIL": 0, "EXCLUDED": 0}
         for _, status, _, _ in rows:
             n[status] += 1
 
@@ -231,7 +201,7 @@ def main() -> int:
             "included/excluded list of the 10x-scale oracle sweep "
             f"(data: `{args.sf_dir}`, regenerate with "
             "`python tools/gen_scaled_data.py 10 /tmp/sf1`).\n\n"
-            f"**{n['PASS']} oracle PASS, {n['ROWS']} rows-only, "
+            f"**{n['PASS']} oracle PASS, "
             f"{n['FAIL']} FAIL, {n['EXCLUDED']} excluded "
             f"(of {total}).** Exclusions are queries whose DuckDB twin "
             "is superlinear at sf1 — the Spark side runs fine; each was "

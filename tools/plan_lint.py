@@ -510,7 +510,7 @@ def lint_queries(names: list[str] | None = None) -> dict[str, list[tuple[str, st
     import io
 
     from local_data_pipeline_spark.queries import QUERIES
-    from local_data_pipeline_spark.session import get_spark
+    from local_data_pipeline_spark.session import get_spark, release
 
     spark = get_spark(app_name="plan_lint", shuffle_partitions=8)
     todo = names or list(QUERIES)
@@ -533,12 +533,7 @@ def lint_queries(names: list[str] | None = None) -> dict[str, list[tuple[str, st
         if findings:
             bad[name] = findings
         # iterative operators localCheckpoint intermediates; drop them
-        spark.catalog.clearCache()
-        try:
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
+        release(spark)
     return bad
 
 

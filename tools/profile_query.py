@@ -6,8 +6,8 @@ plans/<round>/<query>_<tag>.txt (guide §1 / §7.2).
 Usage:
     python tools/profile_query.py [--reps N] [--explain TAG] query [query ...]
 
-Timing methodology matches bench.py exactly (same configs, same warm-up
-prefix, same clearCache + persistent-RDD sweep between queries) so the
+Timing methodology matches bench.py exactly (same session, same warm-up
+prefix, same ``session.release`` between queries) so the
 numbers are comparable to BENCH_local.json entries; the first rep
 approximates the bench's one-pass number, later reps are warm.
 """
@@ -23,6 +23,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from local_data_pipeline_spark.queries import QUERIES  # noqa: E402
+from local_data_pipeline_spark.session import get_spark, release  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -47,25 +48,7 @@ def main() -> int:
 
     import bench
 
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-        )
-        .appName("profile")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_SHUFFLE", "8"))
-        .config("spark.locality.wait", "0")
-        .config("spark.sql.codegen.wholeStage", "true")
-        .config("spark.sql.adaptive.enabled", os.environ.get("SPARK_GRAFT_AQE", "true"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-    )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app_name="profile", shuffle_partitions=8)
     bench._warmup(spark)
 
     plans_dir = os.path.join(
@@ -92,12 +75,7 @@ def main() -> int:
             t0 = time.perf_counter()
             spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             reps.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-            try:
-                for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                    rdd.unpersist()
-            except Exception:
-                pass
+            release(spark)
         results[name] = reps
         print(f"PROF {name} reps={reps} warm_min={min(reps)}", flush=True)
     spark.stop()
