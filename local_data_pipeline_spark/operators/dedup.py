@@ -126,18 +126,47 @@ def minhash_signature(
     tempting all-in-one expression — 32 ``transform``s over the shingle
     array in a single projection — re-inlines shingle construction per
     seed after projection collapse: ~30× slower measured.)"""
+    return shingle_signatures(
+        doc_shingles(df, text_col, id_col, shingle_k), id_col, n_hashes, hash_family
+    )
+
+
+def doc_shingles(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_k: int = 3,
+    block_by: str | None = None,
+) -> DataFrame:
+    """(id, [block_by], sh): one row per distinct shingle of each doc —
+    the relation MinHash signatures and exact Jaccard both start from.
+    A caller that needs several of them over one corpus builds it once,
+    cuts it (``localCheckpoint``) and hands it to
+    :func:`shingle_signatures` and :func:`shingle_jaccard`.
+
+    The narrow source is widened first so the tokenize/shingle/explode
+    map stage parallelizes (see _widen_to_parallelism)."""
+    keys = [id_col, *([block_by] if block_by else [])]
+    df = _widen_to_parallelism(df.select(*keys, text_col))
+    tokd = df.select(*keys, tokens(F.col(text_col)).alias("__t"))
+    return tokd.select(
+        *keys, F.explode(shingles_from_tokens(F.col("__t"), shingle_k)).alias("sh")
+    )
+
+
+def shingle_signatures(
+    shingles: DataFrame,
+    id_col: str = "doc_id",
+    n_hashes: int = 32,
+    hash_family: str = "xxhash64",
+) -> DataFrame:
+    """:func:`minhash_signature` over a prebuilt :func:`doc_shingles`
+    relation (extra columns such as a block key are ignored)."""
     from ..functions.replay import rk_string
 
     if hash_family not in ("xxhash64", "rk_pow5"):
         raise ValueError(f"unknown hash_family: {hash_family!r}")
-    # widen a narrow source so the tokenize/shingle/hash map stage
-    # parallelizes (see _widen_to_parallelism)
-    df = _widen_to_parallelism(df.select(id_col, text_col))
-    tokd = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__t"))
-    exploded = tokd.select(
-        F.col(id_col),
-        F.explode(shingles_from_tokens(F.col("__t"), shingle_k)).alias("sh"),
-    )
+    exploded = shingles
     if hash_family == "rk_pow5":
         # bind the per-shingle RK hash once; the 32 permutations reuse it
         exploded = exploded.withColumn("__rk", rk_string(F.col("sh")))
@@ -285,34 +314,34 @@ def jaccard_pairs(
     formulation — re-walks both arrays per candidate and was measured
     ~linear-in-pairs slower; the join shape is linear in total shingle
     multiplicity instead."""
+    # the tokenize + shingle + explode map work is the expensive stage
+    # (a ~100 MB parquet is ONE split, hence doc_shingles' widen — the
+    # winnowing sf1 lesson); cut it once: sizes and both join sides read it
+    ex = doc_shingles(df, text_col, id_col, shingle_k, block_by)
+    return shingle_jaccard(
+        ex.localCheckpoint(eager=False), pairs, id_col, threshold, block_by
+    )
+
+
+def shingle_jaccard(
+    shingles: DataFrame,
+    pairs: DataFrame | None = None,
+    id_col: str = "doc_id",
+    threshold: float = 0.0,
+    block_by: str | None = None,
+) -> DataFrame:
+    """:func:`jaccard_pairs` over a prebuilt :func:`doc_shingles`
+    relation, which must carry ``block_by`` when blocking. It is read
+    three times (set sizes and both join sides), so pass it cut."""
     if threshold <= 0:
         raise ValueError("threshold must be > 0 (jaccard-0 pairs are not emitted)")
-    # the tokenize + shingle + explode map work is the expensive stage;
-    # widen a narrow source (a ~100 MB parquet is ONE split) so it
-    # parallelizes instead of running as a single straggler task — the
-    # winnowing sf1 lesson, same only-widen rule
-    df = _widen_to_parallelism(
-        df.select(
-            id_col, text_col, *([block_by] if block_by else [])
-        )
-    )
-    tokd = df.select(
-        F.col(id_col),
-        *([F.col(block_by)] if block_by else []),
-        tokens(F.col(text_col)).alias("__t"),
-    )
-    ex = tokd.select(
-        F.col(id_col),
-        *([F.col(block_by)] if block_by else []),
-        F.explode(shingles_from_tokens(F.col("__t"), shingle_k)).alias("sh"),
-    ).localCheckpoint(eager=False)  # reused by sizes + both join sides
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    ex_a = ex.select(
+    sizes = shingles.groupBy(id_col).agg(F.count("*").alias("n_sh"))
+    ex_a = shingles.select(
         F.col(id_col).alias("id_a"),
         *([F.col(block_by).alias("blk")] if block_by else []),
         F.col("sh"),
     )
-    ex_b = ex.select(
+    ex_b = shingles.select(
         F.col(id_col).alias("id_b"),
         *([F.col(block_by).alias("blk")] if block_by else []),
         F.col("sh"),

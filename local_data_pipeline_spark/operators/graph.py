@@ -301,9 +301,11 @@ def kcore(
     Fixed rounds → known job count and an exactly-unrollable SQL twin
     (the hits/label_propagation oracle pattern); peeling is monotone
     (the alive set only shrinks), so once a round removes nothing the
-    remaining rounds are no-ops and the result IS the true k-core —
-    pytest pins convergence-within-rounds on the query's graph, and a
-    cascade test pins the multi-round chain collapse.
+    remaining rounds are no-ops and the result IS the true k-core. A
+    peel that has not converged by then returns the ``rounds``-round
+    peel, a superset of the k-core; pytest pins convergence within the
+    declared query's budget on the sf0.001 test data, and a cascade test
+    pins the multi-round chain collapse.
 
     Scale: each round is one join+agg shuffled on the node key; the
     alive set shrinks monotonically, so later rounds cost less;

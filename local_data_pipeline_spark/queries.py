@@ -8446,19 +8446,19 @@ def attribution_linear_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_type") == "purchase") & (F.col("value") >= 0)
     ).select(
         F.col("event_id").alias("p_event"),
-        "user_id",
+        F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
         F.floor(F.col("value") * 1000000).cast("bigint").alias("micros"),
     )
     t = ev.filter(F.col("event_type").isin("click", "view")).select(
         F.col("event_id").alias("t_event"),
-        "user_id",
+        F.col("user_id").alias("t_user"),
         F.col("ts").alias("t_ts"),
         "event_type",
     )
     joined = p.join(
         t,
-        (p.user_id == t.user_id)
+        (F.col("p_user") == F.col("t_user"))
         & (F.col("t_ts") < F.col("p_ts"))
         & (F.col("t_ts") >= F.col("p_ts") - F.expr("INTERVAL 7 DAYS")),
         "left",
@@ -10426,12 +10426,17 @@ def minhash_precision_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame
     if mod > 1:
         d = d.filter(F.col("doc_id") % mod == 0)
     n_scope = d.count()
-    sigs = DD.minhash_signature(d, n_hashes=32, shingle_k=3)
+    # one (doc, source, shingle) relation feeds the signatures and both
+    # exact-Jaccard sides, so the tokenize/shingle stage runs once
+    sh = DD.doc_shingles(d, shingle_k=3, block_by="source").localCheckpoint(
+        eager=False
+    )
+    sigs = DD.shingle_signatures(sh, n_hashes=32)
     # the candidate and truth relations each feed multiple counts/joins —
     # persist so the signature/jaccard stages run once, release on exit
     cands = DD.lsh_candidate_pairs(sigs, n_bands=8).persist()
     truth = (
-        DD.jaccard_pairs(d, None, shingle_k=3, threshold=0.7, block_by="source")
+        DD.shingle_jaccard(sh, None, threshold=0.7, block_by="source")
         .select("id_a", "id_b")
         .persist()
     )
@@ -10446,7 +10451,7 @@ def minhash_precision_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame
         n_cand, n_truth = _overlap(spark, cands.count, truth.count)
         n_tp, found = _overlap(
             spark,
-            DD.jaccard_pairs(d, cands, shingle_k=3, threshold=0.7).count,
+            DD.shingle_jaccard(sh, cands, threshold=0.7).count,
             truth.join(cands, ["id_a", "id_b"], "left_semi").count,
         )
         precision_ok = n_cand == 0 or (n_tp / n_cand) >= 0.95
@@ -10899,13 +10904,13 @@ def attribution_time_decay_events(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.col("event_type") == "purchase") & (F.col("value") >= 0)
     ).select(
         F.col("event_id").alias("p_event"),
-        "user_id",
+        F.col("user_id").alias("p_user"),
         F.col("ts").alias("p_ts"),
         F.floor(F.col("value") * 1000000).cast("bigint").alias("micros"),
     )
     t = ev.filter(F.col("event_type").isin("click", "view")).select(
         F.col("event_id").alias("t_event"),
-        "user_id",
+        F.col("user_id").alias("t_user"),
         F.col("ts").alias("t_ts"),
         "event_type",
     )
@@ -10915,7 +10920,7 @@ def attribution_time_decay_events(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     joined = p.join(
         t,
-        (p.user_id == t.user_id)
+        (F.col("p_user") == F.col("t_user"))
         & (F.col("t_ts") < F.col("p_ts"))
         & (F.col("t_ts") >= F.col("p_ts") - F.expr("INTERVAL 7 DAYS")),
         "left",
@@ -16774,10 +16779,13 @@ def forget_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     e = _t(spark, sf_dir, "events")
-    # reused by four semi-joins — checkpoint so customer scans once
+    # reused by four semi-joins — checkpoint so customer scans once. Its
+    # key gets its own name: the customer hop joins it back to `c`, and
+    # c["c_custkey"] == forget["c_custkey"] would compare one attribute
+    # with itself and lean on the analyzer to untangle the self-join
     forget = (
         c.filter(F.col("c_custkey") % 97 == 0)
-        .select("c_custkey")
+        .select(F.col("c_custkey").alias("f_key"))
         .localCheckpoint(eager=False)
     )
 
@@ -16793,15 +16801,15 @@ def forget_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(name).alias("table_name"), "n_rows", "n_keys")
 
     affected_orders = o.join(
-        F.broadcast(forget), o["o_custkey"] == forget["c_custkey"], "left_semi"
+        F.broadcast(forget), o["o_custkey"] == forget["f_key"], "left_semi"
     ).select("o_orderkey")
     return (
-        impact(c, "c_custkey", "customer", forget, "c_custkey")
-        .unionAll(impact(o, "o_custkey", "orders", forget, "c_custkey"))
+        impact(c, "c_custkey", "customer", forget, "f_key")
+        .unionAll(impact(o, "o_custkey", "orders", forget, "f_key"))
         .unionAll(
             impact(li, "l_orderkey", "lineitem", affected_orders, "o_orderkey")
         )
-        .unionAll(impact(e, "user_id", "events", forget, "c_custkey"))
+        .unionAll(impact(e, "user_id", "events", forget, "f_key"))
     )
 
 
@@ -17767,14 +17775,18 @@ def kcore_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     partners — the dense backbone left when marginal nodes cascade away,
     with each survivor's in-core degree. 6 fixed peel rounds, exactly
     unrolled in the DuckDB twin (the hits/LPA oracle pattern: identical
-    recurrence, MATERIALIZED per level); peeling is monotone, so pytest
-    pins that the graph converges within the budget, making the fixed-
-    round result the true 3-core.
+    recurrence, MATERIALIZED per level). Peeling is monotone, so the
+    fixed-round result is the true 3-core only where the peel converges
+    within the budget; pytest pins that on the sf0.001 test data. Larger
+    graphs need more rounds: the 5-, 6-, 7- and 8-round results hold
+    965, 954, 946 and 940 parts at sf0.01 and 925, 916, 909 and 904 on
+    the benchmark's warehouse, and there the result is the 6-round peel
+    both engines compute.
 
     Scale: one join+agg per round shuffled on the node key over a
     monotonically shrinking alive set; the support-≥2 HAVING collapses
     the edge set ~300x before any iteration (the shared
-    _copurchase_edges contract); lineage cut every other round. At sf1
+    _copurchase_edges contract); lineage cut every round. At sf1
     the 3-core is empty, so the scale gate attests the k=2 variant
     (kcore_copurchase_query) instead of counting a 0-row match."""
     return _kcore3_fn(spark, sf_dir)

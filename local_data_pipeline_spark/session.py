@@ -68,6 +68,12 @@ def session_conf(
         # local[N] has one executor, so every preferred location can be met
         # at once; the 3 s delay-scheduling wait buys nothing here.
         "spark.locality.wait": "0",
+        # Generated-class cache (static conf). The default 100 entries is
+        # smaller than one pass's working set (~275 classes for a nightly
+        # registry build, ~220 for the iterative operators), so the LRU
+        # evicted every class before its reuse and each pass recompiled
+        # nearly all of them in Janino and the JIT.
+        "spark.sql.codegen.cache.maxEntries": "1000",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # events.parquet stores TIMESTAMP(NANOS); Spark reads it as int64 only

@@ -19,9 +19,14 @@ from local_data_pipeline_spark.operators.dedup import (
     jaccard_pairs,
     minhash_near_dups,
     minhash_signature,
+    simhash,
     simhash_near_dups,
 )
-from local_data_pipeline_spark.operators.similarity import brute_force_topk, lsh_topk
+from local_data_pipeline_spark.operators.similarity import (
+    _bucket_col,
+    brute_force_topk,
+    lsh_topk,
+)
 
 
 BASE = (
@@ -98,6 +103,66 @@ def test_memoized_signatures_join_keeps_each_side(spark, docs, family):
         for r in joined.select("doc_id", "a.signature", "b.signature").collect()
     }
     assert got == {k: (alone_a[k], alone_b[k]) for k in (1, 2)}
+
+
+def _bucket_sides(spark, docs, kind, family):
+    """Two frames of one memoized bucket Column — the ANN hyperplane /
+    rademacher bucket or the simhash — over DISTINCT inputs that share
+    ids (1-3 vs 4-6 renumbered), plus each side's rows computed alone."""
+    if kind == "simhash":
+        sides = [
+            simhash(d, hash_family=family).withColumnRenamed("simhash", "bucket")
+            for d in (
+                docs.filter(F.col("doc_id") <= 3),
+                docs.filter(F.col("doc_id") >= 3).withColumn("doc_id", F.col("doc_id") - 2),
+            )
+        ]
+    else:
+        vecs = spark.createDataFrame(
+            [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(8)]) for i in range(1, 7)],
+            "doc_id long, embedding array<double>",
+        )
+        sides = [
+            d.select("doc_id", _bucket_col("embedding", 8, 6, 42, family).alias("bucket"))
+            for d in (
+                vecs.filter(F.col("doc_id") <= 3),
+                vecs.filter(F.col("doc_id") >= 4).withColumn("doc_id", F.col("doc_id") - 3),
+            )
+        ]
+    alone = [{r.doc_id: r.bucket for r in d.collect()} for d in sides]
+    assert alone[0] != alone[1]
+    return sides, alone
+
+
+BUCKET_FAMILIES = [
+    ("ann", "xx_float"),
+    ("ann", "rademacher"),
+    ("simhash", "xxhash64"),
+    ("simhash", "rk_pow5"),
+]
+
+
+@pytest.mark.parametrize("kind,family", BUCKET_FAMILIES)
+def test_memoized_buckets_union_keeps_each_side(spark, docs, kind, family):
+    """Both sides reuse one memoized bucket Column (same expression ids);
+    unioned in one plan, each side's rows still equal it computed alone."""
+    (a, b), alone = _bucket_sides(spark, docs, kind, family)
+    got = sorted((r.doc_id, r.bucket) for r in a.union(b).collect())
+    assert got == sorted([*alone[0].items(), *alone[1].items()])
+
+
+@pytest.mark.parametrize("kind,family", BUCKET_FAMILIES)
+def test_memoized_buckets_join_keeps_each_side(spark, docs, kind, family):
+    """Joined on the id in one plan, each side's bucket column still holds
+    that side's own value, not the other side's."""
+    (a, b), (alone_a, alone_b) = _bucket_sides(spark, docs, kind, family)
+    joined = a.alias("a").join(b.alias("b"), "doc_id")
+    got = {
+        r.doc_id: (r[1], r[2])
+        for r in joined.select("doc_id", "a.bucket", "b.bucket").collect()
+    }
+    assert got == {k: (alone_a[k], alone_b[k]) for k in alone_a.keys() & alone_b.keys()}
+    assert len(got) >= 2
 
 
 def test_simhash_near_dup_hamming(spark, docs):

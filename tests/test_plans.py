@@ -7,6 +7,8 @@ results are still correct.
 
 import os
 
+import pytest
+
 from local_data_pipeline_spark.plans.inspect import (
     broadcast_join_count,
     has_pushed_filter,
@@ -594,3 +596,31 @@ def test_sparse_cosine_salts_hot_postings(spark):
     ]
     assert join_lines, "no join keyed on (token, __salt) found in plan"
     assert "BroadcastExchange" in plan
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "attribution_linear_events",
+        "attribution_time_decay_events",
+        "forget_impact_report",
+    ],
+)
+def test_join_conditions_never_compare_a_column_with_itself(spark, monkeypatch, name):
+    """Both sides of these joins project one frame. A condition such as
+    p.user_id == t.user_id compares one attribute with itself (Spark warns
+    "Constructing trivially true equals predicate") and leaves the result
+    to the analyzer's self-join rewrite; each side gets its own key name."""
+    from pyspark.sql.classic.column import Column
+
+    trivial = []
+    eq = Column.__eq__
+
+    def checked(self, other):
+        if isinstance(other, Column) and self._jc.equals(other._jc):
+            trivial.append(str(self))
+        return eq(self, other)
+
+    monkeypatch.setattr(Column, "__eq__", checked)
+    _df(spark, name)
+    assert trivial == []

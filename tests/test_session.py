@@ -17,7 +17,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def test_bench_session_conf(monkeypatch):
     """bench.py gets the session it always had (master, app name, 16g heap,
     8 shuffle partitions, locality.wait=0, UTC, Arrow, nanosAsLong, no UI),
-    minus three entries that only restated Spark's defaults."""
+    minus three entries that only restated Spark's defaults, plus a
+    codegen cache sized to the engine's generated-class working set."""
     import bench
 
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
@@ -41,11 +42,34 @@ def test_bench_session_conf(monkeypatch):
         "spark.driver.memory": "16g",
         "spark.sql.shuffle.partitions": "8",
         "spark.locality.wait": "0",
+        "spark.sql.codegen.cache.maxEntries": "1000",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.ui.enabled": "false",
     }
+
+
+def test_codegen_cache_holds_a_pass_working_set(spark):
+    """A pass of the engine generates a few hundred distinct classes, more
+    than Spark's default 100-entry codegen cache holds. 120 distinct
+    plans are prepared twice: the second round must find every class
+    cached. Preparing the physical RDD compiles a plan's whole-stage
+    class on the driver as an action would, without running a job."""
+    from pyspark.sql import functions as F
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME()
+
+    def one_round():
+        before = compiled.getCount()
+        for i in range(120):  # the literal is inlined: one class per i
+            df = spark.range(3).select((F.col("id") + F.lit(i)).alias("x"))
+            df._jdf.queryExecution().toRdd()
+        return compiled.getCount() - before
+
+    assert one_round() >= 120
+    assert one_round() == 0
 
 
 def test_dropped_confs_are_spark_defaults(spark):

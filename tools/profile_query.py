@@ -10,6 +10,11 @@ Timing methodology matches bench.py exactly (same session, same warm-up
 prefix, same ``session.release`` between queries) so the
 numbers are comparable to BENCH_local.json entries; the first rep
 approximates the bench's one-pass number, later reps are warm.
+
+Each rep also reports how many classes Janino compiled and the compile
+time it took (deltas of Spark's CodegenMetrics compile-time histogram
+count and of CodeGenerator's compile-time total), so a warm rep that
+still compiles shows up without a re-run.
 """
 
 from __future__ import annotations
@@ -26,6 +31,16 @@ from local_data_pipeline_spark.queries import QUERIES  # noqa: E402
 from local_data_pipeline_spark.session import get_spark, release  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def compile_totals(spark) -> tuple[int, int]:
+    """(classes compiled, compile nanoseconds) since the JVM started.
+    Both are bumped by the same ``CodeGenerator.doCompile`` call: the
+    histogram's count per class, ``compileTime`` by each duration."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return n.getCount(), gen.compileTime()
 
 
 def main() -> int:
@@ -56,7 +71,7 @@ def main() -> int:
         "plans",
         args.plans_dir,
     )
-    results: dict[str, list[float]] = {}
+    results: dict[str, dict[str, list]] = {}
     for name in args.queries:
         spec = QUERIES[name]
         if args.explain is not None:
@@ -69,15 +84,23 @@ def main() -> int:
                 os.path.join(plans_dir, f"{name}_{args.explain}.txt"), "w"
             ) as fh:
                 fh.write(plan)
-        reps = []
+        reps, compiles, compile_ms = [], [], []
         for i in range(args.reps):
             spark.sparkContext.setJobDescription(f"{name} rep{i}")
+            n0, ns0 = compile_totals(spark)
             t0 = time.perf_counter()
             spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             reps.append(round(time.perf_counter() - t0, 3))
+            n1, ns1 = compile_totals(spark)
+            compiles.append(n1 - n0)
+            compile_ms.append(round((ns1 - ns0) / 1e6, 1))
             release(spark)
-        results[name] = reps
-        print(f"PROF {name} reps={reps} warm_min={min(reps)}", flush=True)
+        results[name] = {"reps": reps, "compiles": compiles, "compile_ms": compile_ms}
+        print(
+            f"PROF {name} reps={reps} warm_min={min(reps)} "
+            f"compiles={compiles} compile_ms={compile_ms}",
+            flush=True,
+        )
     spark.stop()
     print("PROFILE_JSON " + json.dumps(results), flush=True)
     return 0
