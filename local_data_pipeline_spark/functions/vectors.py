@@ -35,12 +35,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def l2_normalize(a: Column) -> Column:
-    """Unit-normalize an embedding (propagates null for zero vectors)."""
-    n = l2_norm(a)
-    return F.when(n != 0, F.transform(a, lambda x: x.cast("double") / n))
-
-
 def arrow_unnest_vectors(df, id_col: str = "vec_id", vec_col: str = "embedding"):
     """Columnar unnest of an ``array<float>`` column via ``mapInArrow`` —
     (id, vec) rows become (id, dim, val double) rows entirely at the

@@ -21,12 +21,14 @@ Determinism contract (same result at any parallelism / partitioning):
   a float sum would drift with partitioning;
 - empty clusters keep their previous centroid.
 
-Scale notes: each Lloyd iteration is one Arrow-batched assignment pass
-(k*dim broadcast, no shuffle) plus one hash aggregate of (cluster, dim)
-partial sums — map-side combinable, k*dim result rows regardless of
-input size. The gram-matrix dedup runs per cluster via applyInPandas;
-clusters are size-bounded by k, and a hot cluster splits with a salt the
-same way embedding_near_dups_arrow's buckets do.
+Scale notes: k-means is product quantization's Lloyd loop with one
+subspace (pq._lloyd and its assignment UDF): each iteration is one
+Arrow-batched assignment pass (k*dim broadcast, no shuffle) plus one
+hash aggregate of (cluster, dim) partial sums — map-side combinable,
+k*dim result rows regardless of input size. The gram-matrix dedup runs
+per cluster via applyInPandas; clusters are size-bounded by k, and a hot
+cluster splits with a salt the same way embedding_near_dups's buckets
+do.
 """
 
 from __future__ import annotations
@@ -40,23 +42,7 @@ from pyspark.sql import types as T
 
 from ..functions.numeric import dsum, floor6
 from .dedup import dedup_clusters
-
-
-def _assign_udf(centroids: list[list[float]]):
-    """Scalar pandas UDF: nearest-centroid index (squared L2, ties ->
-    lowest index) from a driver-broadcast centroid matrix."""
-    from pyspark.sql.functions import pandas_udf
-
-    c = np.array(centroids, dtype=np.float64)  # k x dim
-
-    @pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        m = np.array(list(vecs), dtype=np.float64)  # n x dim
-        # ||x-c||^2 = ||x||^2 - 2x.c + ||c||^2; ||x||^2 constant per row
-        d = -2.0 * (m @ c.T) + (c * c).sum(axis=1)[None, :]
-        return pd.Series(np.argmin(d, axis=1).astype("int32"))
-
-    return assign
+from .pq import _lloyd, _pq_assign_udf
 
 
 def _dist_udf(centroids: list[list[float]]):
@@ -88,29 +74,15 @@ def kmeans_fit(
     vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Lloyd's k-means; returns the k centroids (list of dim-length lists).
+    It is PQ's training loop (pq._lloyd) with one subspace.
 
     Deterministic by construction (module docstring); fixed ``n_iters``
     rather than a convergence probe so the job count is known up front
     (inertia is non-increasing per iteration — pinned in tests)."""
     init_rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
     centroids = [[float(x) for x in r[0]] for r in init_rows]
-    dim = len(centroids[0])
-    for _ in range(n_iters):
-        assigned = df.select(
-            F.col(vec_col).alias("v"),
-            _assign_udf(centroids)(F.col(vec_col)).alias("cluster"),
-        )
-        stats = (
-            assigned.select("cluster", F.posexplode("v").alias("d", "x"))
-            .groupBy("cluster", "d")
-            .agg(dsum("x").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new_c = [list(c) for c in centroids]  # empty cluster keeps old
-        for r in stats:
-            new_c[r["cluster"]][r["d"]] = r["s"] / r["n"]
-        centroids = new_c
-    return centroids
+    subs = df.select(F.lit(0).alias("sub"), F.col(vec_col).alias("v"))
+    return _lloyd(subs, [centroids], n_iters)[0]
 
 
 def kmeans_assign(
@@ -120,7 +92,7 @@ def kmeans_assign(
     out_col: str = "cluster",
 ) -> DataFrame:
     return df.withColumn(
-        out_col, _assign_udf(centroids)(F.col(vec_col)).cast("int")
+        out_col, _pq_assign_udf([centroids])(F.lit(0), F.col(vec_col))
     )
 
 

@@ -34,6 +34,7 @@ from ..functions.text import fingerprint, shingles_from_tokens, tokens, word_shi
 
 
 from ..session import widen_to_parallelism as _widen_to_parallelism
+from .graph import iterate
 
 
 # ----------------------------------------------------------------- exact
@@ -411,11 +412,13 @@ def dedup_clusters(
     to ONE canonical doc even when A~C wasn't emitted.
 
     Algorithm: iterative min-label propagation (the standard large-scale
-    CC shape — alternating join + min-aggregate until fixpoint, checked
-    driver-side per round). Each iteration is one join + one aggregate;
-    rounds needed = graph diameter in the worst case, ~log for typical
-    near-dup clusters. Input: (id_a, id_b) columns; ids of docs with no
-    pair simply don't appear (they are their own cluster).
+    CC shape — alternating join + min-aggregate until fixpoint), run
+    through graph.iterate: the count of changed labels rides each
+    round's checkpoint job and ends the loop at 0. Each iteration is one
+    join + one aggregate; rounds needed = graph diameter in the worst
+    case, ~log for typical near-dup clusters. Input: (id_a, id_b)
+    columns; ids of docs with no pair simply don't appear (they are their
+    own cluster).
     """
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -428,27 +431,18 @@ def dedup_clusters(
         .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
         .select(F.col("src").alias("id"), F.least("label", "src").alias("label"))
     )
-    from pyspark.sql import Observation
 
-    for _ in range(max_iterations):
-        # propagate: my new label = min(my label, labels of my neighbors).
-        # The old label rides through the same aggregate (each id has
-        # exactly one self row), so convergence needs no extra join/job —
-        # the changed-probe is an OBSERVED METRIC collected by the very
-        # job that materializes the eager checkpoint (round 11: the
-        # previous per-iteration `filter(..).limit(1).count()` was a
-        # second job per round; observe folds it into the first —
-        # metrics ride task completion, so no extra pass). A speculative
-        # duplicate can only OVERCOUNT the nonnegative changed-sum,
-        # which at worst runs one harmless extra round — it can never
-        # fake convergence.
+    def step(labels: DataFrame, _m: dict | None) -> DataFrame:
+        # my new label = min(my label, labels of my neighbors). The old
+        # label rides through the same aggregate (each id has exactly one
+        # self row), so the changed count needs no extra join or job.
+        labels = labels.select("id", "label")
         neighbor_labels = (
             edges.join(labels, edges.dst == labels.id)
             .select(F.col("src").alias("id"), F.col("label"))
             .withColumn("is_self", F.lit(0))
         )
-        obs = Observation()
-        merged = (
+        return (
             labels.withColumn("is_self", F.lit(1))
             .unionByName(neighbor_labels)
             .groupBy("id")
@@ -458,20 +452,16 @@ def dedup_clusters(
                     "old_label"
                 ),
             )
-            .observe(
-                obs,
-                # coalesce: sum over an EMPTY relation observes NULL,
-                # which must read as converged (0), not loop forever
-                F.coalesce(
-                    F.sum((F.col("label") < F.col("old_label")).cast("long")),
-                    F.lit(0).cast("long"),
-                ).alias("changed"),
-            )
-            .localCheckpoint()  # eager: cut the iterative lineage
         )
-        labels = merged.select("id", "label")
-        if obs.get["changed"] == 0:
-            break
+
+    changed = F.sum((F.col("label") < F.col("old_label")).cast("long"))
+    labels, _ = iterate(
+        labels,
+        step,
+        max_iterations,
+        observe=[changed.alias("changed")],
+        until=lambda m: not m["changed"],
+    )
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 
@@ -602,7 +592,6 @@ def winnowing_overlap_pairs(
     k: int = 16,
     w: int = 8,
     min_shared: int = 3,
-    use_arrow: bool = True,
     max_df: int | None = None,
 ) -> DataFrame:
     """Near-dup/overlap candidates by shared winnowing fingerprints:
@@ -621,7 +610,6 @@ def winnowing_overlap_pairs(
     they carry no discriminative signal anyway) bounds every posting
     list and makes the join cost max_df × multiplicity, linear again.
     None keeps exact all-pairs semantics for small corpora."""
-    make = winnowing_fingerprints_arrow if use_arrow else winnowing_fingerprints
     # Parallelism plumbing (the sf1 lesson): the fingerprint makers
     # widen their own narrow sources; see _widen_to_parallelism.
     src = df.select(id_col, text_col)
@@ -635,7 +623,7 @@ def winnowing_overlap_pairs(
     # shuffle BYTES are small but the per-key join fan-out is not,
     # which is exactly the case AQE's size-based coalescing misjudges).
     fps = (
-        make(src, text_col, id_col, k, w)
+        winnowing_fingerprints_arrow(src, text_col, id_col, k, w)
         .localCheckpoint(eager=False)
         .repartition(cores * 2, "fingerprint")
     )

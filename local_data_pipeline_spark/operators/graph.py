@@ -1,6 +1,6 @@
-"""PageRank and HITS over an edge DataFrame — the iterative graph
-operators beside connected-components label propagation
-(operators/dedup.dedup_clusters).
+"""PageRank, HITS, label propagation and k-core over an edge DataFrame,
+plus :func:`iterate`, the round loop they and connected components
+(operators/dedup.dedup_clusters) share.
 
 Reference scope: the reference has no graph operators; this is §2.E
 extension surface (graph centrality over co-occurrence graphs — e.g.
@@ -12,31 +12,89 @@ functions/numeric.dsum), so repeated runs and different partitionings
 produce bit-identical ranks. The damping/dangling arithmetic is plain
 double with identical expression shape every iteration.
 
-Scale: each iteration is one join (ranks x edges, shuffled on the
-edge source) plus one aggregate on the destination — the standard
-Pregel-as-joins shape. Ranks are localCheckpoint'd (eager) each
-iteration to stop lineage growth; the dangling-mass / normalizer
-1-row totals ride that SAME job as ``Observation`` metrics (round
-12 — the dedup_clusters convergence-probe pattern): previously each
-was a separate in-plan broadcast cross join whose build was its own
-job, doubling jobs per iteration. Exactness: the metrics are decimal
-sums (order-insensitive), and the observe node executes inside the
-checkpoint job's RESULT stage, where the scheduler ignores duplicate
-completions of an already-finished result partition (speculative or
-retried result tasks update accumulators at most once per partition
-— unlike shuffle-map stages, the known SQL-metrics double-count
-caveat does not apply) — so the literal fed into the next iteration
-is bit-equal to the old in-plan broadcast column."""
+Scale: each round is one join (state x edges, shuffled on the join key)
+plus one aggregate — the standard Pregel-as-joins shape. The edge
+relation is cut once before the loop; how each round's lineage is cut
+and how a 1-row total reaches the next round is :func:`iterate`'s
+business."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import itertools
+from typing import Callable, Sequence
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..functions.numeric import dsum
 
 #: Decimal shape for rank mass: ranks are probabilities (<= 1), so all
 #: 25 digits serve the fraction; 18 fractional digits keeps round-off
 #: far below float64 epsilon while staying exactly mergeable.
 _RANK_DEC = "decimal(25,18)"
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, dict | None], DataFrame],
+    rounds: int,
+    observe: Sequence[Column] = (),
+    until: Callable[[dict], bool] | None = None,
+) -> tuple[DataFrame, dict | None]:
+    """The round loop of every iterative DataFrame operator: run
+    ``state = step(state, metrics)`` at most ``rounds`` times and return
+    ``(state, metrics)`` after the last round. ``metrics`` is the dict of
+    ``observe`` aggregates over the state ``step`` is given (None in the
+    first round, and always None when nothing is observed).
+
+    Lineage is cut every round, since at scale an uncut level is a
+    corpus-sized recompute in every later round. The cut follows from the
+    arguments:
+
+    - with ``observe``, the round's output is checkpointed EAGERLY and the
+      aggregates ride that checkpoint's own job as ``Observation``
+      metrics, so no separate action runs;
+    - without, it is checkpointed LAZILY and its last stage runs inside
+      the next round's job (under AQE the round's shuffle stages still run
+      when the cut is taken).
+
+    ``until(metrics)`` ends the loop after the first round where it holds
+    (connected components' ``changed == 0``). A sum over an empty relation
+    observes None, so a predicate such as ``not m["changed"]`` counts an
+    empty state as converged instead of looping forever.
+
+    Retries cannot change a metric: the observe node sits on top of the
+    round's plan, so it runs in the checkpoint job's RESULT stage, where
+    the scheduler ignores duplicate completions of an already-finished
+    partition — a speculative or retried task updates the metric at most
+    once per partition (the SQL-metrics double count applies to
+    shuffle-map stages only). Decimal sums are order-insensitive, so a
+    metric fed into the next round as a literal is bit-equal to the same
+    total computed in-plan."""
+    metrics = None
+    for _ in range(rounds):
+        state = step(state, metrics)
+        if not observe:
+            state = state.localCheckpoint(eager=False)
+            continue
+        obs = Observation()
+        state = state.observe(obs, *observe).localCheckpoint(eager=True)
+        metrics = obs.get
+        if until is not None and until(metrics):
+            break
+    return state, metrics
+
+
+def _edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct (src, dst) relation, cut once: every round re-reads
+    it, and an uncut edge plan — for the co-purchase callers a
+    per-basket-quadratic self-join + aggregate — would re-execute inside
+    every round's job (OPTIMIZATION_r11.md, round 12)."""
+    return (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
 def pagerank(
@@ -51,26 +109,15 @@ def pagerank(
     Returns (node, rank) with ranks summing to 1. Nodes are the union
     of sources and destinations; dangling nodes (no out-edges)
     redistribute their mass uniformly, so total mass is conserved
-    exactly (up to the documented decimal scale)."""
-    from pyspark.sql import Observation
-
-    # checkpoint the edge relation ONCE (round 12): `nodes` and `shares`
-    # below each eager-checkpoint a derivation of it, and an un-cut edge
-    # plan — for the co-purchase callers a per-basket-quadratic
-    # self-join + aggregate — re-executed inside BOTH jobs (measured at
-    # sf0.1: 2.6-4.8 s + 2.8-3.3 s for the two checkpoints, vs ~0.45 s
-    # per actual iteration). hits/kcore/label_propagation already cut
-    # here; pagerank was the one that didn't.
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    exactly (up to the documented decimal scale). Each iteration's
+    dangling mass is observed on the previous ranks' cut; a first round
+    only cuts the uniform start to observe its mass."""
+    e = _edges(edges, src, dst)
     out_deg = e.groupBy("src").agg(F.count("*").alias("out_deg"))
     # nodes carry a loop-invariant IS-DANGLING flag (no out-edges), so
     # each iteration's dangling mass is observable on the rank rows
     # themselves instead of through a per-iteration semi join + 1-row
-    # broadcast aggregate (round 12 — see module docstring).
+    # broadcast aggregate.
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
@@ -91,16 +138,10 @@ def pagerank(
         .select("src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("share"))
         .localCheckpoint(eager=True)
     )
-    ranks = nodes.select("node", "__dang", F.lit(1.0 / n).alias("rank"))
-    # initial dangling mass — same exact-decimal expression the loop
-    # observes, over the (tiny, checkpointed) flag relation: one
-    # O(|nodes|) job before the loop instead of a per-iteration subtree.
-    dmass = nodes.filter(F.col("__dang")).agg(
-        F.coalesce(
-            F.sum(F.lit(1.0 / n).cast(_RANK_DEC)).cast("double"), F.lit(0.0)
-        )
-    ).first()[0]
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame, m: dict | None) -> DataFrame:
+        if m is None:  # the first round only cuts and observes the start
+            return ranks
         contribs = (
             ranks.join(shares, ranks["node"] == shares["src"])
             .select(
@@ -110,42 +151,24 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("c").cast("double").alias("inflow"))
         )
-        obs = Observation()
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                "__dang",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.lit(dmass) / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            # next iteration's dangling mass rides the checkpoint job as
-            # an observed metric: exact decimal sum over the flagged rows
-            # — the same value set the old semi-join aggregate summed
-            # (sum skips the NULLs the `when` leaves on non-dangling
-            # rows), and decimal addition is order-insensitive.
-            .observe(
-                obs,
-                F.coalesce(
-                    F.sum(
-                        F.when(F.col("__dang"), F.col("rank").cast(_RANK_DEC))
-                    ).cast("double"),
-                    F.lit(0.0),
-                ).alias("dmass"),
-            )
-            # cut lineage EVERY iteration (round-11 measurement; round 12
-            # made the cut EAGER — the observed metric must be collected
-            # before the next iteration's plan is built, and the lazy
-            # variant was materialized by the next iteration's first job
-            # anyway). At scale an uncached level is a corpus-sized
-            # recompute, so one block-manager write per iteration is the
-            # cheap side of the trade.
-            .localCheckpoint(eager=True)
+        return nodes.join(contribs, "node", "left").select(
+            "node",
+            "__dang",
+            (
+                F.lit((1.0 - damping) / n)
+                + F.lit(damping) * F.lit(m["dmass"]) / F.lit(float(n))
+                + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
+            ).alias("rank"),
         )
-        dmass = obs.get["dmass"]
+
+    # dangling mass: exact decimal sum over the flagged rows (sum skips
+    # the NULLs the `when` leaves on non-dangling rows)
+    dmass = F.coalesce(
+        F.sum(F.when(F.col("__dang"), F.col("rank").cast(_RANK_DEC))).cast("double"),
+        F.lit(0.0),
+    ).alias("dmass")
+    start = nodes.select("node", "__dang", F.lit(1.0 / n).alias("rank"))
+    ranks, _ = iterate(start, step, iterations + 1, observe=[dmass])
     return ranks.select("node", "rank")
 
 
@@ -166,57 +189,37 @@ def hits(
     rule as :func:`pagerank`. Normalization direction (which side ranks
     first) is unchanged. Fixed ``iterations`` → known job count.
 
-    Scale: per iteration, two join+agg passes (edges x scores shuffled
-    on the join key); each side's sum-normalizer total rides the side's
-    eager checkpoint job as an ``Observation`` metric (round 12 — see
-    module docstring; previously a 1-row aggregate broadcast in-plan as
-    a cross join, whose build was an extra job per side). Lineage is
-    cut every iteration, exactly like pagerank; the normalizing
-    division is applied as a projection OVER the checkpointed raw sums
-    with the observed total as a literal — bit-equal to the old
-    broadcast column (same decimal sum, same double division)."""
-    from pyspark.sql import Observation
+    Scale: each iteration is two :func:`iterate` rounds, authorities from
+    hubs and then hubs from authorities, each one join+agg over the edges.
+    A round outputs raw per-node sums and observes their total; the next
+    round normalizes them as a projection over the cut with the total as
+    a literal. A first round only cuts the start (every hub at 1) to
+    observe its total, the hub count."""
+    e = _edges(edges, src, dst)
+    sides = itertools.cycle((("src", "dst"), ("dst", "src")))
+    used: dict[str, DataFrame] = {}  # last normalized side, by join key
 
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    def normalized(raw: DataFrame, m: dict) -> DataFrame:
+        return raw.select("node", (F.col("s") / F.lit(m["t"])).alias("score"))
+
+    def step(raw: DataFrame, m: dict | None) -> DataFrame:
+        if m is None:  # the first round only cuts and observes the start
+            return raw
+        frm, to = next(sides)
+        used[frm] = scores = normalized(raw, m)
+        return (
+            e.join(scores.withColumnRenamed("node", frm), frm)
+            .groupBy(F.col(to).alias("node"))
+            .agg(dsum("score", 18).alias("s"))
+        )
+
+    start = e.select(F.col("src").alias("node")).distinct().select(
+        "node", F.lit(1.0).alias("s")
     )
-    hub_nodes = e.select(F.col("src").alias("node")).distinct()
-    # driver-side count over the checkpointed edge relation (tiny job)
-    # replaces the 1-row count broadcast: 1.0 / n is the identical IEEE
-    # division either way.
-    n_hubs = hub_nodes.count()
-    h = hub_nodes.select("node", F.lit(1.0 / n_hubs).alias("score"))
-    a = None
-    from ..functions.numeric import dsum
-
-    def _normalized(raw: DataFrame, key: str) -> DataFrame:
-        """Checkpoint the raw per-node sums, observing their total on
-        the same job; normalize as a projection over the checkpoint."""
-        obs = Observation()
-        raw = raw.observe(obs, dsum("s", 18).alias("t")).localCheckpoint(
-            eager=True
-        )
-        return raw.select(
-            F.col(key).alias("node"),
-            (F.col("s") / F.lit(obs.get["t"])).alias("score"),
-        )
-
-    for _ in range(iterations):
-        a = _normalized(
-            e.join(h.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(dsum("score", 18).alias("s")),
-            "dst",
-        )
-        h = _normalized(
-            e.join(a.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(dsum("score", 18).alias("s")),
-            "src",
-        )
-    return h, a
+    raw, m = iterate(
+        start, step, 2 * iterations + 1, observe=[dsum("s", 18).alias("t")]
+    )
+    return normalized(raw, m), used.get("dst")
 
 
 def label_propagation(
@@ -245,18 +248,13 @@ def label_propagation(
     hash aggregate instead of a sort-based window (no per-partition
     sort, and the second exchange carries one pre-merged row per
     (node, map task) instead of every (node, label) pair). No driver
-    collect anywhere; labels are localCheckpoint'd (lazy) each
-    iteration to stop lineage growth. Returns (node, label) after
+    collect anywhere; the rounds run through :func:`iterate`, which
+    cuts each round's labels lazily. Returns (node, label) after
     ``iterations`` rounds. Node ids may be of any orderable type
     (strings, any integer including ``Long.MIN_VALUE``): only the
     non-negative count is negated, never the label."""
-    # checkpoint the edge relation ONCE (round-11): every iteration's
-    # message join reads ``edges``, and an un-checkpointed edge plan —
-    # for the co-purchase callers a per-basket-quadratic self-join —
-    # re-executes inside EVERY iteration's checkpoint segment (the
-    # round-11 LPA fix; see OPTIMIZATION_r11.md for the measured
-    # before/after). pagerank/kcore already did this; LPA was the one
-    # iterative operator that didn't.
+    # the edge relation is cut once, as in _edges but without the
+    # distinct: a repeated edge is a repeated message here
     edges = edges.select(
         F.col(src).alias(src), F.col(dst).alias(dst)
     ).localCheckpoint(eager=True)
@@ -265,13 +263,13 @@ def label_propagation(
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
-    labels = nodes.select("node", F.col("node").alias("label"))
-    for _ in range(iterations):
+
+    def step(labels: DataFrame, _m: None) -> DataFrame:
         msgs = edges.join(
             labels.withColumnRenamed("node", src), src
         ).select(F.col(dst).alias("node"), "label")
         counts = msgs.groupBy("node", "label").agg(F.count("*").alias("c"))
-        labels = (
+        return (
             counts.groupBy("node")
             .agg(
                 F.min(F.struct((-F.col("c")).alias("nc"), F.col("label"))).alias(
@@ -279,8 +277,10 @@ def label_propagation(
                 )
             )
             .select("node", F.col("__best.label").alias("label"))
-            .localCheckpoint(eager=False)
         )
+
+    start = nodes.select("node", F.col("node").alias("label"))
+    labels, _ = iterate(start, step, iterations)
     return labels
 
 
@@ -308,28 +308,22 @@ def kcore(
     pins the multi-round chain collapse.
 
     Scale: each round is one join+agg shuffled on the node key; the
-    alive set shrinks monotonically, so later rounds cost less;
-    lineage is cut every round (iterative-operator contract)."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    alive = e.select(F.col("src").alias("node")).distinct()
-    for r in range(rounds):
+    alive set shrinks monotonically, so later rounds cost less. The
+    alive set is referenced twice per round (src and dst semi-joins), so
+    an uncut round would re-execute: :func:`iterate` cuts it lazily
+    every round."""
+    e = _edges(edges, src, dst)
+
+    def step(alive: DataFrame, _m: None) -> DataFrame:
         deg = (
             e.join(alive.withColumnRenamed("node", "src"), "src")
             .join(alive.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src")
             .agg(F.count("*").alias("degree"))
         )
-        alive = deg.filter(F.col("degree") >= k).select(
-            F.col("src").alias("node")
-        )
-        # cut EVERY round (round-11): the alive set is referenced twice
-        # per round (src and dst semi-joins), so an uncached round
-        # re-executes — measured 2.7-3.1 s vs 2.4-2.7 s at sf0.1.
-        alive = alive.localCheckpoint(eager=False)
+        return deg.filter(F.col("degree") >= k).select(F.col("src").alias("node"))
+
+    alive, _ = iterate(e.select(F.col("src").alias("node")).distinct(), step, rounds)
     return (
         e.join(alive.withColumnRenamed("node", "src"), "src")
         .join(alive.withColumnRenamed("node", "dst"), "dst")

@@ -13,7 +13,8 @@ nearest-neighbor ranking without ever reconstructing the vectors.
 
 Determinism contract (same result at any parallelism / partitioning):
 - init: per subspace, the sub-vectors of the k smallest ids (no RNG —
-  same rule as clustering.kmeans_fit);
+  same rule as clustering.kmeans_fit, which is this training loop with
+  one subspace);
 - assignment: squared-L2 argmin, ties -> lowest code (numpy argmin);
 - centroid recompute: exact decimal sums per (subspace, code, dim)
   divided by counts (functions/numeric.dsum) — order-insensitive;
@@ -55,8 +56,10 @@ def pq_train(
     ``len(codebook) == m`` and ``len(codebook[sub]) == k``.
 
     One exploded (id, sub, subvec) frame drives ALL m subspace k-means
-    runs simultaneously — each Lloyd iteration is a single assignment
-    pass plus a single (sub, code, dim) aggregate, not m separate jobs."""
+    runs simultaneously through one Lloyd loop (:func:`_lloyd`, which
+    k-means shares as its m=1 case) — each iteration is a single
+    assignment pass plus a single (sub, code, dim) aggregate, not m
+    separate jobs."""
     init_rows = df.orderBy(id_col).limit(k).select(vec_col).collect()
     if len(init_rows) < k:
         # a short corpus would silently yield < k centroids per subspace,
@@ -84,6 +87,16 @@ def pq_train(
         ).alias("sub", "v"),
     ).localCheckpoint(eager=False)
 
+    return _lloyd(subs, codebook, n_iters)
+
+
+def _lloyd(
+    subs: DataFrame, codebook: list[list[list[float]]], n_iters: int
+) -> list[list[list[float]]]:
+    """Lloyd's algorithm over (sub, v) rows for every subspace at once;
+    k-means (clustering.kmeans_fit) is the one-subspace case. Each
+    iteration is one assignment pass plus one (sub, code, d) exact-decimal
+    aggregate collected to the driver; an empty code keeps its centroid."""
     for _ in range(n_iters):
         assigned = subs.select(
             "sub", "v", _pq_assign_udf(codebook)(F.col("sub"), F.col("v")).alias("code")
@@ -103,7 +116,8 @@ def pq_train(
 
 def _pq_assign_udf(codebook):
     """Scalar pandas UDF: nearest-centroid code within the row's
-    subspace (squared L2, ties -> lowest code)."""
+    subspace (squared L2, ties -> lowest code), from a driver-broadcast
+    m x k x d_sub codebook; k-means passes its centroids as m=1."""
     from pyspark.sql.functions import pandas_udf
 
     cb = np.array(codebook, dtype=np.float64)  # m x k x d_sub
@@ -115,6 +129,7 @@ def _pq_assign_udf(codebook):
         for s in np.unique(sub.values):
             sel = sub.values == s
             c = cb[s]  # k x d_sub
+            # ||x-c||^2 = ||x||^2 - 2x.c + ||c||^2; ||x||^2 constant per row
             d = -2.0 * (x[sel] @ c.T) + (c * c).sum(axis=1)[None, :]
             out[sel] = np.argmin(d, axis=1).astype("int32")
         return pd.Series(out)

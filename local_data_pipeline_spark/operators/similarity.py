@@ -756,7 +756,7 @@ def ivf_search_bucketed(
     return _rank_topk(scored, k)
 
 
-def embedding_near_dups_arrow(
+def embedding_near_dups(
     df: DataFrame,
     threshold: float = 0.95,
     id_col: str = "vec_id",
@@ -766,12 +766,12 @@ def embedding_near_dups_arrow(
     seed: int = 42,
     hash_family: str = "xx_float",
 ) -> DataFrame:
-    """Arrow fast path for embedding near-dup: hyperplane buckets, then one
-    numpy gram matrix per bucket via ``applyInPandas`` (upper triangle ≥
-    threshold). Same results as ``embedding_near_dups`` at 6-decimal
-    rounding (``hash_family`` as on ``lsh_topk`` — "rademacher" makes the
-    bucketing engine-replayable; the numpy round-6 cosine already is, per
-    the attested cosine_topk_arrow pattern). Skew note: a degenerate
+    """Embedding-cosine near-duplicate pairs (id_a, id_b, cos_sim), id_a <
+    id_b: hyperplane buckets, then one numpy gram matrix per bucket via
+    ``applyInPandas`` (upper triangle ≥ threshold at 6-decimal rounding;
+    ``hash_family`` as on ``lsh_topk`` — "rademacher" makes the bucketing
+    engine-replayable; the numpy round-6 cosine already is, per the
+    attested cosine_topk_arrow pattern). Skew note: a degenerate
     bucket lands on one task — split hot buckets with a secondary salt
     when bucket-size monitoring trips."""
     import numpy as np
@@ -806,40 +806,6 @@ def embedding_near_dups_arrow(
         .applyInPandas(per_bucket, "id_a long, id_b long, cos_sim double")
         .distinct()
     )
-
-
-def embedding_near_dups(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 6,
-    seed: int = 42,
-    hash_family: str = "xx_float",
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs: bucket with hyperplane LSH,
-    verify exact cosine ≥ threshold within buckets. Output (id_a, id_b,
-    cos_sim), id_a < id_b. ``hash_family`` as on ``lsh_topk``."""
-    b = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        l2_norm(F.col(vec_col)).alias("nrm"),
-        _bucket_col(vec_col, dim, n_planes, seed, hash_family).alias("bucket"),
-    )
-    a, c = b.alias("a"), b.alias("c")
-    pairs = a.join(
-        c,
-        (F.col("a.bucket") == F.col("c.bucket"))
-        & (F.col("a.id") < F.col("c.id")),
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("c.id").alias("id_b"),
-        F.round(
-            dot(F.col("a.v"), F.col("c.v")) / (F.col("a.nrm") * F.col("c.nrm")), 6
-        ).alias("cos_sim"),
-    )
-    return pairs.filter(F.col("cos_sim") >= threshold).distinct()
 
 
 def mmr_select(

@@ -2406,7 +2406,7 @@ def embedding_near_dups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cosine_topk_arrow pattern). The float-hyperplane family remains
     the operator default."""
     emb = _t(spark, sf_dir, "embeddings")
-    return SIM.embedding_near_dups_arrow(
+    return SIM.embedding_near_dups(
         emb, threshold=0.35, dim=64, n_planes=3, hash_family="rademacher"
     ).orderBy("id_a", "id_b")
 
@@ -10419,13 +10419,13 @@ def minhash_precision_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame
     ``recall_ok`` flags (both measured at exactly 1.0 across
     sf0.001–sf1; floors 0.95, vacuous-empty cases flag true)."""
     d = _t(spark, sf_dir, "documents")
-    n_docs = d.count()
+    n_scope = n_docs = d.count()
     # ceiling division: floor let the scope reach 9999 docs (~4x the
     # quadratic cost the cap was sized for) before stepping
     mod = max(1, (n_docs + 4999) // 5000)
     if mod > 1:
         d = d.filter(F.col("doc_id") % mod == 0)
-    n_scope = d.count()
+        n_scope = d.count()
     # one (doc, source, shingle) relation feeds the signatures and both
     # exact-Jaccard sides, so the tokenize/shingle stage runs once
     sh = DD.doc_shingles(d, shingle_k=3, block_by="source").localCheckpoint(

@@ -289,7 +289,6 @@ class Registry:
         spark: SparkSession,
         *,
         select: list[str] | None = None,
-        database: str | None = None,
     ) -> list[BuildResult]:
         """≙ ``dbt build`` (dbt_defs.py:27): materialize in topo order, then
         run every model's data tests as one query; a test failure raises
@@ -325,16 +324,15 @@ class Registry:
             if m.materialization == "view":
                 df.createOrReplaceTempView(name)
             elif m.materialization in ("table", "incremental"):
-                target = f"{database}.{name}" if database else name
                 # a temp view left by a PREVIOUS build of this model
                 # shadows the table name — ALTER TABLE/refresh would
                 # resolve to the view and fail on a same-session rebuild
                 spark.catalog.dropTempView(name)
                 mode = "overwrite"
                 incremental = m.materialization == "incremental"
-                if incremental and spark.catalog.tableExists(target):
+                if incremental and spark.catalog.tableExists(name):
                     wcol = m.incremental_col
-                    prev_max = spark.table(target).agg(F.max(wcol)).collect()[0][0]
+                    prev_max = spark.table(name).agg(F.max(wcol)).collect()[0][0]
                     if prev_max is not None:
                         df = df.filter(F.col(wcol) > F.lit(prev_max))
                     mode = "append"
@@ -347,20 +345,20 @@ class Registry:
                 writer = observed.write.mode(mode)
                 if m.partition_by:
                     writer = writer.partitionBy(*m.partition_by)
-                writer.saveAsTable(target)
+                writer.saveAsTable(name)
                 rows = int(obs.get["rows"])
                 if not incremental and m.description:
                     # persist model docs on the table (≙ dbt +persist_docs,
                     # dbt_project.yml:11-13)
                     comment = m.description.replace("'", "''")[:256]
                     spark.sql(
-                        f"ALTER TABLE {target} SET TBLPROPERTIES "
+                        f"ALTER TABLE {name} SET TBLPROPERTIES "
                         f"('comment' = '{comment}', 'group' = '{m.group}')"
                     )
                 # a partitioned overwrite leaves stale file listings in the
                 # session's relation cache when the table was read earlier
-                spark.catalog.refreshTable(target)
-                df = self._cache[name] = spark.table(target)
+                spark.catalog.refreshTable(name)
+                df = self._cache[name] = spark.table(name)
                 df.createOrReplaceTempView(name)
             result = BuildResult(
                 model=name,

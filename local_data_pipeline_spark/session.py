@@ -34,8 +34,6 @@ TABLES = (
     "embeddings",
 )
 
-DATABASES = ("raw", "stg", "intm", "pres")
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -120,12 +118,6 @@ def release(spark: SparkSession) -> int:
     for rdd in rdds:
         rdd.unpersist()
     return len(rdds)
-
-
-def ensure_databases(spark: SparkSession) -> None:
-    """``CREATE DATABASE IF NOT EXISTS`` for each layer (≙ open_meteo.py:62)."""
-    for db in DATABASES:
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -71,10 +71,6 @@ def write_table(
     writer.save(path)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", header).csv(path)
-
-
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).json(path)
 

@@ -554,6 +554,28 @@ def test_minhash_eval_ratios_consistent(spark):
     assert r["recall_ok"] == 1
 
 
+def test_minhash_eval_counts_documents_once_below_scope_cap(spark, monkeypatch):
+    """Below the 5000-document cap the scope is the whole corpus, so its
+    size is the one document count: the query body fires one ``count()``
+    of its own, not a second count of the same frame (the candidate and
+    truth counts run inside ``_overlap``'s threads)."""
+    import sys
+
+    cls = type(spark.range(1))
+    counted = []
+    orig = cls.count
+
+    def count(self):
+        counted.append(sys._getframe(1).f_code.co_name)
+        return orig(self)
+
+    monkeypatch.setattr(cls, "count", count)
+    df = QUERIES["minhash_precision_recall_eval"].fn(spark, SF_DIR)
+    monkeypatch.undo()
+    assert counted.count("minhash_precision_recall_eval") == 1
+    assert df.collect()[0]["n_docs_scope"] == load_table(spark, SF_DIR, "documents").count()
+
+
 # --------------------------------------------------- catalog profiling
 
 def test_null_profile_covers_catalog_and_counts_exactly(spark):

@@ -125,13 +125,6 @@ ALLOWLIST: dict[tuple[str, str], str] = {
 #: construction-time collect is scale-safe. Every entry must name a
 #: BOUND on the collected row count that is independent of data volume.
 S4_ALLOWLIST: dict[tuple[str, str], str] = {
-    ("graph.py", "pagerank"): (
-        "collects the 1-ROW initial dangling-mass aggregate (an exact "
-        "decimal sum over the checkpointed node-flag relation) before "
-        "the loop; every subsequent iteration's mass rides the "
-        "checkpoint job as an Observation metric (round 12) — no "
-        "per-iteration or data-proportional collect."
-    ),
     ("packing.py", "_distributed_cumsum_with_total"): (
         "collects K per-shard partial sums (K = shard count, config-"
         "bounded, a few bytes each) to build the offset broadcast. "

@@ -11,7 +11,8 @@ prefix, same ``session.release`` between queries) so the
 numbers are comparable to BENCH_local.json entries; the first rep
 approximates the bench's one-pass number, later reps are warm.
 
-Each rep also reports how many classes Janino compiled and the compile
+Each rep runs under its own job group (``<query> rep<i>``) and reports
+the Spark jobs it fired, how many classes Janino compiled and the compile
 time it took (deltas of Spark's CodegenMetrics compile-time histogram
 count and of CodeGenerator's compile-time total), so a warm rep that
 still compiles shows up without a re-run.
@@ -64,6 +65,7 @@ def main() -> int:
     import bench
 
     spark = get_spark(app_name="profile", shuffle_partitions=8)
+    sc = spark.sparkContext
     bench._warmup(spark)
 
     plans_dir = os.path.join(
@@ -84,20 +86,28 @@ def main() -> int:
                 os.path.join(plans_dir, f"{name}_{args.explain}.txt"), "w"
             ) as fh:
                 fh.write(plan)
-        reps, compiles, compile_ms = [], [], []
+        reps, jobs, compiles, compile_ms = [], [], [], []
         for i in range(args.reps):
-            spark.sparkContext.setJobDescription(f"{name} rep{i}")
+            group = f"{name} rep{i}"
+            sc.setJobGroup(group, group)
             n0, ns0 = compile_totals(spark)
             t0 = time.perf_counter()
             spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             reps.append(round(time.perf_counter() - t0, 3))
             n1, ns1 = compile_totals(spark)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
             compiles.append(n1 - n0)
             compile_ms.append(round((ns1 - ns0) / 1e6, 1))
             release(spark)
-        results[name] = {"reps": reps, "compiles": compiles, "compile_ms": compile_ms}
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        results[name] = {
+            "reps": reps,
+            "jobs": jobs,
+            "compiles": compiles,
+            "compile_ms": compile_ms,
+        }
         print(
-            f"PROF {name} reps={reps} warm_min={min(reps)} "
+            f"PROF {name} reps={reps} warm_min={min(reps)} jobs={jobs} "
             f"compiles={compiles} compile_ms={compile_ms}",
             flush=True,
         )
