@@ -117,8 +117,9 @@ def pagerank(
     # nodes carry a loop-invariant IS-DANGLING flag (no out-edges), so
     # each iteration's dangling mass is observable on the rank rows
     # themselves instead of through a per-iteration semi join + 1-row
-    # broadcast aggregate.
-    nodes = (
+    # broadcast aggregate. They are cut once, and counted by the cut's
+    # own job.
+    nodes, m = iterate(
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -127,10 +128,12 @@ def pagerank(
             "node",
             "left",
         )
-        .select("node", F.coalesce(F.col("__d"), F.lit(True)).alias("__dang"))
-        .localCheckpoint(eager=True)
+        .select("node", F.coalesce(F.col("__d"), F.lit(True)).alias("__dang")),
+        lambda state, _: state,
+        1,
+        observe=[F.count("*").alias("n")],
     )
-    n = nodes.count()
+    n = m["n"]
     # edges annotated with the 1/out_deg share; checkpointed once — the
     # loop re-reads this relation every iteration.
     shares = (
@@ -303,9 +306,11 @@ def kcore(
     (the alive set only shrinks), so once a round removes nothing the
     remaining rounds are no-ops and the result IS the true k-core. A
     peel that has not converged by then returns the ``rounds``-round
-    peel, a superset of the k-core; pytest pins convergence within the
-    declared query's budget on the sf0.001 test data, and a cascade test
-    pins the multi-round chain collapse.
+    peel, a superset of the k-core. pytest pins convergence within the
+    declared query's budget on the sf0.001 test data only: above it the
+    declared ``kcore_copurchase_parts`` (k=3, 6 rounds) has not converged
+    and returns the 6-round peel. A cascade test pins the multi-round
+    chain collapse.
 
     Scale: each round is one join+agg shuffled on the node key; the
     alive set shrinks monotonically, so later rounds cost less. The

@@ -295,73 +295,6 @@ def logistic_irls(
     return beta
 
 
-def ridge_fit(
-    features: DataFrame,
-    feature_cols: list[str],
-    label_col: str,
-    lam: float = 1.0,
-) -> np.ndarray:
-    """Distributed ridge regression via normal equations: ONE Arrow pass
-    reduces each partition to (XᵀX, Xᵀy) — (p+1)² + (p+1) doubles per
-    partition regardless of row count — and the driver solves
-    ``(XᵀX + λI)β = Xᵀy`` (the intercept row/col of λI is zeroed: the
-    mean is never penalized). The corpus is scanned exactly ONCE (unlike
-    IRLS there is no iteration); the S4 allowlist carries the p²-sized
-    collect. Returns coefficients, intercept first."""
-    import pandas as pd  # executor-side
-
-    p = len(feature_cols) + 1
-
-    def partials(batches):
-        xtx = np.zeros((p, p))
-        xty = np.zeros(p)
-        for pdf in batches:
-            x = np.column_stack(
-                [np.ones(len(pdf))]
-                + [pdf[c].to_numpy(dtype=np.float64) for c in feature_cols]
-            )
-            y = pdf["__y"].to_numpy(dtype=np.float64)
-            xtx += x.T @ x
-            xty += x.T @ y
-        yield pd.DataFrame(
-            {"xtx": [xtx.reshape(-1).tolist()], "xty": [xty.tolist()]}
-        )
-
-    sel = features.select(
-        *feature_cols, F.col(label_col).cast("double").alias("__y")
-    )
-    # Fail FAST on NULLs (same guard as ridge_kfold_cv): a NULL
-    # feature/label becomes NaN in the Arrow batch and silently poisons
-    # XtX/Xty — np.linalg.solve then returns all-NaN coefficients
-    # instead of erroring. The assert rides the __y projection (a bare
-    # filter(assert_true(...).isNull()) is constant-folded away and the
-    # side effect silently dropped).
-    non_null = F.col("__y").isNotNull()
-    for c in feature_cols:
-        non_null = non_null & F.col(c).isNotNull()
-    sel = sel.withColumn(
-        "__y",
-        F.when(
-            F.assert_true(
-                non_null,
-                F.lit(
-                    "ridge_fit: NULL in feature/label column — drop or "
-                    "impute upstream"
-                ),
-            ).isNull(),
-            F.col("__y"),
-        ),
-    )
-    parts = sel.mapInPandas(
-        partials, schema="xtx array<double>, xty array<double>"
-    ).collect()
-    xtx = np.sum([np.array(r["xtx"]).reshape(p, p) for r in parts], axis=0)
-    xty = np.sum([np.array(r["xty"]) for r in parts], axis=0)
-    reg = lam * np.eye(p)
-    reg[0, 0] = 0.0  # don't shrink the intercept
-    return np.linalg.solve(xtx + reg, xty)
-
-
 def ridge_fit_local(
     x: np.ndarray, y: np.ndarray, lam: float = 1.0
 ) -> np.ndarray:
@@ -478,7 +411,7 @@ def pca_variance_audit(
     scale: int = 12,
 ) -> DataFrame:
     """:func:`pca_explained_variance` graduated to a value-hash oracle
-    (the ridge_fit_exact split of exact-vs-flagged work): the EXACT,
+    (the ridge_fit split of exact-vs-flagged work): the EXACT,
     SQL-replayable side is the per-dimension variance diagonal — each
     dimension's Σx and Σx² are exact-decimal sums (``dsum``), variance
     forms by the identical double expression ``sq/n − (s/n)²`` on both
@@ -832,145 +765,6 @@ def unigram_viterbi_encode(
     )
 
 
-def ridge_kfold_cv(
-    features: DataFrame,
-    feature_cols: "list[str]",
-    label_col: str,
-    fold_col: str,
-    k: int = 5,
-    lam: float = 1.0,
-) -> DataFrame:
-    """K-fold cross-validation for normal-equations ridge WITHOUT
-    training k times over the data: the additivity of sufficient
-    statistics is the whole trick. Pass 1 reduces each partition to
-    PER-FOLD (XᵀX, Xᵀy, n) triples — k·(p+1)² doubles regardless of
-    row count (S4-allowlisted collect); the driver forms every fold's
-    training model by SUBTRACTING that fold's statistic from the total
-    (leave-one-fold-out) and solves k (p+1)-sized systems. Pass 2
-    broadcasts the k coefficient vectors and scores every row against
-    ITS OWN fold's held-out model; squared errors quantize to integer
-    micro-units per row and bigint-sum per fold (deterministic at any
-    parallelism — the dsir rule). The corpus crosses the wire twice
-    total, independent of k.
-
-    Returns (fold, n_test, sse_micro) — callers derive RMSE."""
-    import pandas as pd
-
-    p = len(feature_cols) + 1
-    sel = features.select(
-        F.col(fold_col).cast("int").alias("__fold"),
-        *[F.col(c).cast("double").alias(c) for c in feature_cols],
-        F.col(label_col).cast("double").alias("__y"),
-    )
-    # Fail FAST on NULLs: a NULL feature/label becomes NaN in the Arrow
-    # batch and silently poisons every leave-one-fold-out statistic
-    # (NaN XtX -> all-NaN betas -> np.int64(NaN) garbage SSE), and a
-    # NULL fold crashes deep inside mapInPandas. The assert rides the
-    # __fold projection (apply_changes' pattern — a bare
-    # filter(assert_true(...).isNull()) is constant-folded away and the
-    # side effect silently dropped).
-    non_null = F.col("__fold").isNotNull() & F.col("__y").isNotNull()
-    for c in feature_cols:
-        non_null = non_null & F.col(c).isNotNull()
-    sel = sel.withColumn(
-        "__fold",
-        F.when(
-            F.assert_true(
-                non_null,
-                F.lit(
-                    "ridge_kfold_cv: NULL in fold/feature/label column — "
-                    "drop or impute upstream"
-                ),
-            ).isNull(),
-            F.col("__fold"),
-        ),
-    )
-
-    def partials(batches):
-        acc: dict = {}
-        for pdf in batches:
-            x = np.column_stack(
-                [np.ones(len(pdf))]
-                + [pdf[c].to_numpy(dtype=np.float64) for c in feature_cols]
-            )
-            y = pdf["__y"].to_numpy(dtype=np.float64)
-            folds = pdf["__fold"].to_numpy()
-            for f in np.unique(folds):
-                m = folds == f
-                xtx, xty, n = acc.setdefault(
-                    int(f), [np.zeros((p, p)), np.zeros(p), 0]
-                )
-                xf = x[m]
-                xtx += xf.T @ xf
-                xty += xf.T @ y[m]
-                acc[int(f)][2] = n + int(m.sum())
-        # empty partitions yield NOTHING: an empty DataFrame's float64
-        # columns cannot Arrow-cast to array<double> (found as a flaky
-        # ArrowNotImplementedError when rows << partitions)
-        if acc:
-            yield pd.DataFrame(
-                {
-                    "fold": list(acc),
-                    "xtx": [v[0].reshape(-1).tolist() for v in acc.values()],
-                    "xty": [v[1].tolist() for v in acc.values()],
-                    "n": [v[2] for v in acc.values()],
-                }
-            )
-
-    rows = sel.mapInPandas(
-        partials,
-        "fold int, xtx array<double>, xty array<double>, n bigint",
-    ).collect()
-    stats: dict = {}
-    for r in rows:
-        xtx, xty, n = stats.setdefault(
-            r["fold"], [np.zeros((p, p)), np.zeros(p), 0]
-        )
-        xtx += np.array(r["xtx"]).reshape(p, p)
-        xty += np.array(r["xty"])
-        stats[r["fold"]][2] = n + r["n"]
-    tot_xtx = np.sum([v[0] for v in stats.values()], axis=0)
-    tot_xty = np.sum([v[1] for v in stats.values()], axis=0)
-    reg = lam * np.eye(p)
-    reg[0, 0] = 0.0
-    betas = {
-        f: np.linalg.solve(tot_xtx - v[0] + reg, tot_xty - v[1]).tolist()
-        for f, v in stats.items()
-    }
-    bbetas = features.sparkSession.sparkContext.broadcast(betas)
-
-    def score(batches):
-        bs = {f: np.array(b) for f, b in bbetas.value.items()}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            x = np.column_stack(
-                [np.ones(len(pdf))]
-                + [pdf[c].to_numpy(dtype=np.float64) for c in feature_cols]
-            )
-            y = pdf["__y"].to_numpy(dtype=np.float64)
-            folds = pdf["__fold"].to_numpy()
-            se = np.empty(len(pdf))
-            for f in np.unique(folds):
-                m = folds == f
-                se[m] = (y[m] - x[m] @ bs[int(f)]) ** 2
-            yield pd.DataFrame(
-                {
-                    "fold": folds,
-                    "se_micro": np.round(se * 1_000_000).astype(np.int64),
-                }
-            )
-
-    return (
-        sel.mapInPandas(score, "fold int, se_micro bigint")
-        .groupBy("fold")
-        .agg(
-            F.count("*").alias("n_test"),
-            F.sum("se_micro").alias("sse_micro"),
-        )
-    )
-
-
 def cramer_solve(xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
     """Solve a small linear system by Cramer's rule with the EXACT
     float-operation order of the SQL twins' generated Leibniz
@@ -991,8 +785,8 @@ def cramer_solve(xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
     p = len(xty)
     if p > 7:
         raise ValueError(
-            f"cramer_solve is factorial in p (got {p}); use ridge_fit "
-            "for wide feature panels"
+            f"cramer_solve is factorial in p (got {p}); solve a wide "
+            "feature panel's normal equations with np.linalg.solve"
         )
     a = [[float(xtx[i][j]) for j in range(p)] for i in range(p)]
     b = [float(v) for v in xty]
@@ -1023,26 +817,26 @@ def cramer_solve(xtx: np.ndarray, xty: np.ndarray) -> np.ndarray:
     return np.array(out)
 
 
-def ridge_fit_exact(
+def ridge_fit(
     features: DataFrame,
     feature_cols: "list[str]",
     label_col: str,
     lam: float = 1.0,
     scale: int = 12,
 ) -> np.ndarray:
-    """:func:`ridge_fit` with ORDER-INSENSITIVE sufficient statistics:
-    every XᵀX / Xᵀy entry is an exact-decimal sum (``dsum`` at 12
-    fractional digits) computed in ONE JVM hash aggregate — no Arrow
-    pass, no per-partition float partials. The float-partials path sums
-    partition results in collect order, so its last-ulp bits depend on
-    partitioning; this one is bit-identical at any parallelism AND
-    reproducible by a SQL twin (``dsum_sql`` per entry), which is what
-    lets the ridge query graduate to a value-hash oracle. The per-row
-    1e-12 quantization of products perturbs XᵀX relatively by ~1e-15 —
-    far below the normal-equation conditioning floor.
+    """Ridge regression via normal equations with ORDER-INSENSITIVE
+    sufficient statistics: every XᵀX / Xᵀy entry is an exact-decimal sum
+    (``dsum`` at 12 fractional digits) computed in ONE JVM hash aggregate
+    over one corpus pass, so the statistic is bit-identical at any
+    parallelism AND reproducible by a SQL twin (``dsum_sql`` per entry),
+    which is what lets the ridge query carry a value-hash oracle. The
+    per-row 1e-12 quantization of products perturbs XᵀX relatively by
+    ~1e-15 — far below the normal-equation conditioning floor. The driver
+    solves ``(XᵀX + λI)β = Xᵀy`` by :func:`cramer_solve` (the intercept
+    entry of λI is zeroed: the mean is never penalized); a NULL feature
+    or label fails fast instead of poisoning the statistic.
 
-    Returns coefficients, intercept first (λI with a zeroed intercept
-    entry, same contract as :func:`ridge_fit`)."""
+    Returns coefficients, intercept first."""
     from ..functions.numeric import dsum
 
     p = len(feature_cols) + 1
@@ -1059,7 +853,7 @@ def ridge_fit_exact(
             F.assert_true(
                 non_null,
                 F.lit(
-                    "ridge_fit_exact: NULL in feature/label column — "
+                    "ridge_fit: NULL in feature/label column — "
                     "drop or impute upstream"
                 ),
             ).isNull(),
@@ -1093,7 +887,7 @@ def ridge_fit_exact(
     return cramer_solve(xtx + reg, xty)
 
 
-def ridge_kfold_cv_exact(
+def ridge_kfold_cv(
     features: DataFrame,
     feature_cols: "list[str]",
     label_col: str,
@@ -1101,8 +895,10 @@ def ridge_kfold_cv_exact(
     lam: float = 1.0,
     scale: int = 12,
 ) -> DataFrame:
-    """:func:`ridge_kfold_cv` with ORDER-INSENSITIVE statistics — the
-    exact-decimal sibling that a SQL twin can replay:
+    """K-fold cross-validation for normal-equations ridge WITHOUT
+    training k times over the data — the additivity of sufficient
+    statistics is the whole trick — with ORDER-INSENSITIVE statistics a
+    SQL twin can replay:
 
     - pass 1 is one JVM hash aggregate of per-fold DECIMAL XᵀX / Xᵀy
       sums (no Arrow partials, no collect-order float summation);
@@ -1140,7 +936,7 @@ def ridge_kfold_cv_exact(
             F.assert_true(
                 non_null,
                 F.lit(
-                    "ridge_kfold_cv_exact: NULL in fold/feature/label "
+                    "ridge_kfold_cv: NULL in fold/feature/label "
                     "column — drop or impute upstream"
                 ),
             ).isNull(),
@@ -1180,7 +976,7 @@ def ridge_kfold_cv_exact(
         xty = np.array(
             [float(tot[f"xty_{i}"] - Decimal(r[f"xty_{i}"])) for i in range(p)]
         )
-        # same-order Cramer as the twin — see ridge_fit_exact
+        # same-order Cramer as the twin — see ridge_fit
         betas[int(r["__fold"])] = cramer_solve(xtx + reg, xty)
     pred = None
     for f, b in sorted(betas.items()):

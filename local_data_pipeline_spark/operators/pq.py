@@ -25,10 +25,8 @@ iteration (codebook broadcast, no shuffle on the corpus) plus one
 map-side-combinable aggregate whose result is m*k*(d/m) rows regardless
 of corpus size; the driver only ever sees that model-constant codebook
 (S4-allowlisted in tools/plan_lint.py). Encoding is a single
-``mapInPandas`` pass — no shuffle at all. ADC search broadcasts the
-query-side distance tables (small side by contract, same as
-similarity.brute_force_topk_arrow) and reduces each corpus partition to
-its local top-k before the final k-row-per-query shuffle.
+``mapInPandas`` pass — no shuffle at all. The exact-L2 and ADC searches
+are similarity._arrow_topk with their own score matrix.
 """
 
 from __future__ import annotations
@@ -43,6 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.numeric import dsum
+from .similarity import _arrow_topk
+
 
 def pq_train(
     df: DataFrame,
@@ -185,29 +185,6 @@ def pq_encode(
     )
 
 
-def _tie_inclusive_prune(dq: np.ndarray, k: int) -> np.ndarray:
-    """Indices of every candidate whose distance is <= the k-th smallest
-    (finite) distance. A plain ``argsort[:k]`` breaks distance ties by
-    partition row order, so which tied candidate survives the LOCAL
-    prune would depend on partitioning — violating the module's
-    determinism contract. Emitting the whole tie group (like
-    similarity.brute_force_topk_arrow) lets the deterministic global
-    (dist, neighbor_id) window break ties. ADC ties are common:
-    identical code tuples give bit-identical distances."""
-    finite = np.isfinite(dq)
-    n_finite = int(finite.sum())
-    if n_finite == 0:
-        return np.empty(0, dtype=np.int64)
-    if n_finite > k:
-        # infs sort to the end, so the k-th smallest overall is the
-        # k-th smallest finite value when n_finite > k
-        thresh = np.partition(dq, k - 1)[k - 1]
-        keep = finite & (dq <= thresh)
-    else:
-        keep = finite
-    return np.flatnonzero(keep)
-
-
 def exact_l2_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -217,57 +194,27 @@ def exact_l2_topk(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Exact squared-L2 top-k — the ground truth ADC recall is measured
-    against. Same broadcast-small-query-side / per-partition-prune shape
-    as similarity.brute_force_topk_arrow (which ranks by cosine);
-    S4-allowlisted via adc_topk's contract (queries are the small
-    side)."""
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, q_mat))
+    against. Returns (query_id, neighbor_id, l2_dist, rnk)."""
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qm = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c = np.array(list(pdf[vec_col]), dtype=np.float64)
-            nids = pdf[id_col].values
-            d = (
-                (qm * qm).sum(axis=1)[:, None]
-                - 2.0 * (qm @ c.T)
-                + (c * c).sum(axis=1)[None, :]
-            )
-            rows = []
-            for qi in range(len(ids)):
-                dq = d[qi]
-                if exclude_self:
-                    dq = np.where(nids == ids[qi], np.inf, dq)
-                for ni in _tie_inclusive_prune(dq, k):
-                    rows.append((int(ids[qi]), int(nids[ni]), float(dq[ni])))
-            yield pd.DataFrame(
-                rows or None, columns=["query_id", "neighbor_id", "l2_dist"]
-            )
-
-    cand = corpus.select(id_col, vec_col).mapInPandas(
-        local_topk, "query_id long, neighbor_id long, l2_dist double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("l2_dist"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("l2_dist", 6).alias("l2_dist"),
-            "rnk",
+    def sq_l2(qm, vecs):
+        c = np.array(list(vecs), dtype=np.float64)
+        return (
+            (qm * qm).sum(axis=1)[:, None]
+            - 2.0 * (qm @ c.T)
+            + (c * c).sum(axis=1)[None, :]
         )
-    )
+
+    return _arrow_topk(
+        queries,
+        corpus,
+        k,
+        id_col,
+        vec_col,
+        "l2_dist",
+        "rnk",
+        sq_l2,
+        exclude_self=exclude_self,
+    ).withColumn("l2_dist", F.round("l2_dist", 6))
 
 
 def adc_topk(
@@ -281,71 +228,42 @@ def adc_topk(
 ) -> DataFrame:
     """Approximate top-k by PQ asymmetric distance: per query, an m*k'
     lookup table of exact subspace distances to every code; corpus rows
-    cost m table lookups each — the vectors are never touched.
-
-    The query side is COLLECTED AND BROADCAST (small-side contract,
-    identical to similarity.brute_force_topk_arrow; S4-allowlisted);
-    each codes partition emits only its local top-k per query before the
-    final shuffle. Returns (query_id, neighbor_id, adc_dist, rnk)."""
+    cost m table lookups each — the vectors are never touched. Returns
+    (query_id, neighbor_id, adc_dist, rnk)."""
     cb = np.array(codebook, dtype=np.float64)
     m, kk, d_sub = cb.shape
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)  # nq x dim
-    # tables[q][s][code] = || q_s - c_{s,code} ||^2
-    nq = len(q_ids)
-    tables = np.empty((nq, m, kk), dtype=np.float64)
-    for s in range(m):
-        qs = q_mat[:, s * d_sub : (s + 1) * d_sub]
-        c = cb[s]
-        tables[:, s, :] = (
-            (qs * qs).sum(axis=1)[:, None]
-            - 2.0 * (qs @ c.T)
-            + (c * c).sum(axis=1)[None, :]
-        )
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, tables))
 
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, tabs = bq.value
-        for pdf in batches:
-            if pdf.empty:
-                # an empty Arrow batch makes np.array(list(...)) a 1-D
-                # empty array and cmat[:, s] would raise IndexError
-                continue
-            cmat = np.array(list(pdf["codes"]), dtype=np.int64)  # n x m
-            nids = pdf[id_col].values
-            # dist[q, n] = sum_s tabs[q, s, cmat[n, s]]
-            d = np.zeros((len(ids), len(nids)), dtype=np.float64)
-            for s in range(m):
-                d += tabs[:, s, :][:, cmat[:, s]]
-            rows = []
-            for qi in range(len(ids)):
-                dq = d[qi]
-                if exclude_self:
-                    dq = np.where(nids == ids[qi], np.inf, dq)
-                for ni in _tie_inclusive_prune(dq, k):
-                    rows.append((int(ids[qi]), int(nids[ni]), float(dq[ni])))
-            yield pd.DataFrame(
-                rows or None,
-                columns=["query_id", "neighbor_id", "adc_dist"],
+    def tables(q_mat):
+        # tables[q][s][code] = || q_s - c_{s,code} ||^2
+        out = np.empty((len(q_mat), m, kk), dtype=np.float64)
+        for s in range(m):
+            qs = q_mat[:, s * d_sub : (s + 1) * d_sub]
+            c = cb[s]
+            out[:, s, :] = (
+                (qs * qs).sum(axis=1)[:, None]
+                - 2.0 * (qs @ c.T)
+                + (c * c).sum(axis=1)[None, :]
             )
+        return out
 
-    cand = codes.select(id_col, "codes").mapInPandas(
-        local_topk, "query_id long, neighbor_id long, adc_dist double"
-    )
-    from pyspark.sql import Window
+    def adc(tabs, codes_col):
+        cmat = np.array(list(codes_col), dtype=np.int64)  # n x m
+        # dist[q, n] = sum_s tabs[q, s, cmat[n, s]]
+        d = np.zeros((len(tabs), len(cmat)), dtype=np.float64)
+        for s in range(m):
+            d += tabs[:, s, :][:, cmat[:, s]]
+        return d
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("adc_dist", 6).alias("adc_dist"),
-            "rnk",
-        )
-    )
+    return _arrow_topk(
+        queries,
+        codes,
+        k,
+        id_col,
+        vec_col,
+        "adc_dist",
+        "rnk",
+        adc,
+        prepare=tables,
+        corpus_col="codes",
+        exclude_self=exclude_self,
+    ).withColumn("adc_dist", F.round("adc_dist", 6))

@@ -1,29 +1,40 @@
 """Similarity search over embedding columns (SURVEY §2.E3).
 
-Two paths, as a real 100 TB pipeline would ship them:
+Every top-k operator here (and the PQ searches in pq.py) is "local
+top-k, then one global merge", and each step of that shape is decided in
+one place:
 
-- **Brute-force top-k** (the exact baseline): broadcast the query set,
-  compute cosine against every corpus vector JVM-side, rank per query.
-  Cost is |Q|·|C| dot products with NO shuffle of the corpus (queries are
-  broadcast; ranking shuffles only |Q|·|C| scored rows — prune first with
-  a per-partition pre-top-k to cut that).
-- **Random-hyperplane LSH** (the scale path): bucket vectors by the sign
-  pattern of dot products against ``n_planes`` fixed pseudo-random
-  hyperplanes (deterministic, seeded); search only within matching buckets
-  (optionally multi-probe neighbors at Hamming distance 1). Sub-linear
-  candidate sets; recall tunable by n_planes / n_tables.
+- :func:`_jvm_topk` — the Catalyst tail: broadcast the query side, join
+  it to the corpus (cross, or equi on a candidate key), drop self, score
+  the round-6 cosine, rank. ``brute_force_topk`` cross-joins; ``lsh_topk``
+  joins on a hyperplane bucket; the IVF searches join on a cell.
+- :func:`_arrow_topk` — the numpy path: collect and broadcast the query
+  side, score each corpus partition as one matrix in ``mapInPandas``,
+  keep each partition's tie-inclusive local top-k
+  (:func:`_tie_inclusive_prune`), rank. Callers supply only the score
+  matrix: the cosine (``brute_force_topk_arrow``), squared L2 or PQ ADC
+  distances (pq.py).
+- :func:`_rank_topk` — the one ranking window: per query, score, then
+  neighbor id.
+- :func:`_ivf_quantizer` — the IVF coarse quantizer ``ivf_topk`` and
+  ``ivf_write_bucketed`` share.
 
-Everything is Catalyst expressions (zip_with/aggregate); no UDFs.
+Brute force costs |Q|·|C| dot products with no shuffle of the corpus;
+random-hyperplane LSH and IVF cut the candidate set sub-linearly, with
+recall tunable by n_planes / probe_hamming and n_probe.
 """
 
 from __future__ import annotations
 
-import math
+from typing import Any, Callable
+
+import numpy as np
+import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, dot, l2_norm
+from ..functions.vectors import dot, l2_norm
 
 
 def salt_hot_postings(
@@ -104,16 +115,150 @@ def salt_hot_postings(
     return a, c, [token_col, salt_col]
 
 
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Deterministic per-query ranking: cosine desc (rounded to 6 so ranking
-    is reproducible cross-engine), then neighbor id asc."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
+def _rank_topk(
+    scored: DataFrame, k: int, score: str = "cos_sim", rank: str = "rank"
+) -> DataFrame:
+    """The final ranking of every top-k operator: per query, ``score``
+    (descending for the cosine, ascending for a distance), then neighbor
+    id ascending, so ties break the same way at any partitioning; keeps
+    ranks 1..k."""
+    order = F.desc(score) if score == "cos_sim" else F.asc(score)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return scored.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= k)
+
+
+def _jvm_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    on: str | None = None,
+    exclude_self: bool = True,
+    label_col: str | None = None,
+    exclude_same_label: bool = False,
+) -> DataFrame:
+    """Exact cosine top-k over candidate pairs, JVM-side — the tail every
+    Catalyst search operator shares. The query side is broadcast against
+    the corpus side: a cross join, or an equi-join on the candidate key
+    ``on`` (an LSH bucket, an IVF cell) that both sides carry. Self pairs
+    are dropped, the cosine is rounded to 6 places (so ranking is
+    reproducible cross-engine) and :func:`_rank_topk` ranks it. Norms are
+    per-ROW columns before the join; inside the pair expression they
+    would be recomputed once per pair.
+
+    With ``label_col`` both sides carry their label through as
+    ``own_label`` / ``nb_label``; ``exclude_same_label=True`` keeps only
+    different-label pairs. Returns (query_id, neighbor_id[, own_label,
+    nb_label], cos_sim, rank)."""
+    if exclude_same_label and label_col is None:
+        raise ValueError("exclude_same_label requires label_col")
+    keys = [] if on is None else [on]
+    q_cols = [
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        l2_norm(F.col(vec_col)).alias("q_norm"),
+        *keys,
+    ]
+    c_cols = [
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        l2_norm(F.col(vec_col)).alias("c_norm"),
+        *keys,
+    ]
+    labels = []
+    if label_col is not None:
+        q_cols.append(F.col(label_col).alias("own_label"))
+        c_cols.append(F.col(label_col).alias("nb_label"))
+        labels = ["own_label", "nb_label"]
+    q = F.broadcast(queries.select(*q_cols))
+    c = corpus.select(*c_cols)
+    joined = c.join(q, how="cross") if on is None else c.join(q, on)
+    if exclude_self:
+        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
+    if exclude_same_label:
+        joined = joined.filter(F.col("own_label") != F.col("nb_label"))
+    scored = joined.select(
+        "query_id",
+        "neighbor_id",
+        *labels,
+        F.round(
+            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
+            6,
+        ).alias("cos_sim"),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return _rank_topk(scored, k)
+
+
+def _tie_inclusive_prune(d: np.ndarray, k: int) -> np.ndarray:
+    """Mask of the candidates one corpus partition passes on: per row of
+    the |Q|x|C| matrix ``d`` (smaller ranks first), every FINITE entry <=
+    the row's k-th smallest. Keeping the whole tie group at the k-th value
+    lets the global (score, neighbor_id) window break ties, so the result
+    cannot depend on partitioning (``argsort[:k]`` would keep a
+    partition-order subset; ADC ties are common, since identical code
+    tuples give bit-identical distances). Non-finite entries sort last, so
+    a NaN k-th value means the row has fewer than k finite entries: it
+    reads as +inf and the row keeps them all."""
+    finite = np.isfinite(d)
+    if d.shape[1] <= k:
+        return finite
+    kth = np.partition(d, k - 1, axis=1)[:, k - 1 : k]
+    return finite & (d <= np.where(np.isnan(kth), np.inf, kth))
+
+
+def _arrow_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    metric: str,
+    rank: str,
+    score: Callable[[Any, pd.Series], np.ndarray],
+    prepare: Callable[[np.ndarray], Any] | None = None,
+    corpus_col: str | None = None,
+    exclude_self: bool = True,
+) -> DataFrame:
+    """Top-k by a numpy score matrix per corpus partition — the shape of
+    every Arrow search operator (local top-k per partition, then one
+    global merge). The query side (``id_col``, ``vec_col``) is collected
+    once (queries are the SMALL side by contract) and broadcast as
+    ``(ids, prepare(vectors))``; each corpus partition computes its
+    |Q|x|C| ``metric`` matrix in one ``score(prepared, corpus_col
+    values)`` call inside ``mapInPandas``, sets self pairs to +inf, and
+    passes on only its :func:`_tie_inclusive_prune` survivors, so the
+    ranking shuffle moves about |partitions|·|Q|·k rows instead of
+    |Q|·|C|. Candidates rank by :func:`_rank_topk`: the cosine
+    descending, a distance ascending (the prune negates the cosine).
+    Returns (query_id, neighbor_id, ``metric``, ``rank``)."""
+    q_rows = queries.select(id_col, vec_col).collect()
+    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
+    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    sc = queries.sparkSession.sparkContext
+    bq = sc.broadcast((q_ids, q_mat if prepare is None else prepare(q_mat)))
+    sign = -1.0 if metric == "cos_sim" else 1.0
+    corpus_col = corpus_col or vec_col
+
+    def local_topk(batches):
+        ids, prepared = bq.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            nids = pdf[id_col].values
+            s = score(prepared, pdf[corpus_col])
+            key = sign * s
+            if exclude_self:
+                key[ids[:, None] == nids[None, :]] = np.inf
+            qi, ci = np.nonzero(_tie_inclusive_prune(key, k))
+            yield pd.DataFrame(
+                {"query_id": ids[qi], "neighbor_id": nids[ci], metric: s[qi, ci]}
+            )
+
+    cand = corpus.select(id_col, corpus_col).mapInPandas(
+        local_topk, f"query_id long, neighbor_id long, {metric} double"
     )
+    return _rank_topk(cand, k, metric, rank)
 
 
 def brute_force_topk(
@@ -135,41 +280,16 @@ def brute_force_topk(
     With ``label_col`` set, both sides carry their label through as
     ``own_label`` / ``nb_label``; ``exclude_same_label=True`` restricts
     candidates to different-label vectors (hard-negative mining)."""
-    # norms are hoisted to per-ROW columns before the join; computing
-    # l2_norm inside the pair expression would redo it once per pair
-    q_cols = [
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
-    ]
-    c_cols = [
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
-    ]
-    if label_col is not None:
-        q_cols.append(F.col(label_col).alias("own_label"))
-        c_cols.append(F.col(label_col).alias("nb_label"))
-    q = queries.select(*q_cols)
-    c = corpus.select(*c_cols)
-    joined = c.join(F.broadcast(q), how="cross")
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    if exclude_same_label:
-        if label_col is None:
-            raise ValueError("exclude_same_label requires label_col")
-        joined = joined.filter(F.col("own_label") != F.col("nb_label"))
-    out_cols = ["query_id", "neighbor_id"]
-    if label_col is not None:
-        out_cols += ["own_label", "nb_label"]
-    scored = joined.select(
-        *out_cols,
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
-            6,
-        ).alias("cos_sim"),
+    return _jvm_topk(
+        queries,
+        corpus,
+        k,
+        id_col,
+        vec_col,
+        exclude_self=exclude_self,
+        label_col=label_col,
+        exclude_same_label=exclude_same_label,
     )
-    return _rank_topk(scored, k)
 
 
 def brute_force_topk_arrow(
@@ -185,59 +305,29 @@ def brute_force_topk_arrow(
 
     Catalyst higher-order functions are interpreted (CodegenFallback), so
     the pure-DataFrame ``brute_force_topk`` pays per-element overhead on
-    every pair. Here the query matrix is collected once (queries are the
-    SMALL side by contract), broadcast to executors, and each corpus
-    partition computes all its scores in one BLAS matmul via
-    ``mapInPandas``; per-partition top-k shrinks the ranking shuffle to
-    |partitions|·|Q|·k rows. Results match ``brute_force_topk`` to the
-    same 6-decimal rounding."""
-    import numpy as np
+    every pair. Here :func:`_arrow_topk` scores each corpus partition in
+    one BLAS matmul. Results match ``brute_force_topk`` to the same
+    6-decimal rounding."""
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    sc = queries.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids, q_mat, q_norm))
+    def cosine6(qs, vecs):
+        qm, qn = qs
+        c_mat = np.array(list(vecs), dtype=np.float64)
+        c_norm = np.linalg.norm(c_mat, axis=1)
+        # rounded once — the same rounding the final ranking compares
+        return np.round((qm @ c_mat.T) / np.outer(qn, c_norm), 6)
 
-    def score(batches):
-        import pandas as pd
-
-        ids, qm, qn = bq.value
-        q_ids_arr = np.asarray(ids, dtype=np.int64)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            # |Q| x |C|, rounded once — the same rounding the final global
-            # ranking uses, so the per-partition prune sees the exact
-            # values the ranking will compare.
-            sims = np.round((qm @ c_mat.T) / np.outer(qn, c_norm), 6)
-            n_c = sims.shape[1]
-            kk = min(k + 1, n_c)
-            # Per-partition prune WITHOUT materializing the |C|·|Q| pair
-            # frame (a pandas sort over millions of rows dominated the
-            # runtime): np.partition finds each query's kk-th largest
-            # score in O(|C|); keeping every candidate >= that threshold
-            # is tie-INCLUSIVE, so the deterministic global tie-break
-            # (cos desc, neighbor_id asc) still sees all contenders.
-            kth = np.partition(sims, n_c - kk, axis=1)[:, n_c - kk]
-            qi, ci = np.nonzero(sims >= kth[:, None])
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids_arr[qi],
-                    "neighbor_id": pdf[id_col].values[ci],
-                    "cos_sim": sims[qi, ci],
-                }
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, cos_sim double"
+    return _arrow_topk(
+        queries,
+        corpus,
+        k,
+        id_col,
+        vec_col,
+        "cos_sim",
+        "rank",
+        cosine6,
+        prepare=lambda qm: (qm, np.linalg.norm(qm, axis=1)),
+        exclude_self=exclude_self,
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    return _rank_topk(scored, k)
 
 
 def hyperplane_bucket(
@@ -395,41 +485,21 @@ def lsh_topk(
             return vm.withColumn("__bucket", bucket_expr).drop("__vm")
     else:
         raise ValueError(f"unknown hash_family: {hash_family!r}")
-    bq = with_bucket(queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
-        F.col("__bucket").alias("bucket"),
-    )
     if probe_hamming not in (0, 1):
         raise ValueError("probe_hamming supports 0 (exact bucket) or 1")
+    bq = with_bucket(queries)
     if probe_hamming == 1:
         probes = F.array(
-            F.col("bucket"),
+            F.col("__bucket"),
             *[
-                F.col("bucket").bitwiseXOR(F.lit(1 << p).cast("long"))
+                F.col("__bucket").bitwiseXOR(F.lit(1 << p).cast("long"))
                 for p in range(n_planes)
             ],
         )
-        bq = bq.withColumn("bucket", F.explode(probes))
-    bc = with_bucket(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
-        F.col("__bucket").alias("bucket"),
+        bq = bq.withColumn("__bucket", F.explode(probes))
+    return _jvm_topk(
+        bq, with_bucket(corpus), k, id_col, vec_col, "__bucket", exclude_self
     )
-    joined = bc.join(F.broadcast(bq), "bucket")
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
-            6,
-        ).alias("cos_sim"),
-    )
-    return _rank_topk(scored, k)
 
 
 def ivf_topk(
@@ -451,9 +521,30 @@ def ivf_topk(
     Scale shape: centroids broadcast; assignment is one numpy matmul per
     partition (mapInPandas); the search join is equi on cell id, so the
     corpus shuffles once by cell (or is bucketed by cell at write time and
-    never re-shuffles). Recall rises with n_probe — the classic IVF knob."""
-    import numpy as np
+    never re-shuffles). Recall rises with n_probe — the classic IVF knob.
+    A corpus vector sits in exactly one cell and a query probes distinct
+    cells, so a (query, neighbor) pair meets at most once: no dedup pass."""
+    _, cells = _ivf_quantizer(corpus, n_centroids, id_col, vec_col)
+    return _jvm_topk(
+        cells(queries, n_probe),
+        cells(corpus, 1),
+        k,
+        id_col,
+        vec_col,
+        "cell",
+        exclude_self,
+    )
 
+
+def _ivf_quantizer(
+    corpus: DataFrame, n_centroids: int, id_col: str, vec_col: str
+) -> "tuple[np.ndarray, Callable[[DataFrame, int], DataFrame]]":
+    """The deterministic IVF coarse quantizer: centroids are the
+    ``n_centroids`` corpus vectors with the smallest xxhash64(id),
+    normalized (the only collect, a config-constant row count), and
+    broadcast. Returns ``(centroids, cells)``: ``cells(df, n)`` gives one
+    (id, vec, cell) row for each of a vector's ``n`` nearest centroids
+    (cosine, ties -> lower cell id), one numpy matmul per partition."""
     cent_rows = (
         corpus.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col)))
@@ -462,13 +553,10 @@ def ivf_topk(
     )
     c_mat = np.array([r[1] for r in cent_rows], dtype=np.float64)
     c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-    sc = corpus.sparkSession.sparkContext
-    bcent = sc.broadcast(c_mat)
+    bcent = corpus.sparkSession.sparkContext.broadcast(c_mat)
 
-    def assign(n_cells: int):
+    def cells(df: DataFrame, n_cells: int) -> DataFrame:
         def run(batches):
-            import pandas as pd
-
             cm = bcent.value
             for pdf in batches:
                 if pdf.empty:
@@ -476,9 +564,7 @@ def ivf_topk(
                 m = np.array(list(pdf[vec_col]), dtype=np.float64)
                 m_n = m / np.linalg.norm(m, axis=1, keepdims=True)
                 sims = m_n @ cm.T  # |rows| x |centroids|
-                # n_cells nearest centroids per row (ties → lower cell id)
                 order = np.argsort(-sims, axis=1, kind="stable")[:, :n_cells]
-                n = len(pdf)
                 yield pd.DataFrame(
                     {
                         id_col: np.repeat(pdf[id_col].values, n_cells),
@@ -489,38 +575,11 @@ def ivf_topk(
                     }
                 )
 
-        return run
+        return df.select(id_col, vec_col).mapInPandas(
+            run, f"{id_col} long, {vec_col} array<float>, cell int"
+        )
 
-    corpus_cells = corpus.select(id_col, vec_col).mapInPandas(
-        assign(1), f"{id_col} long, {vec_col} array<float>, cell int"
-    )
-    query_cells = queries.select(id_col, vec_col).mapInPandas(
-        assign(n_probe), f"{id_col} long, {vec_col} array<float>, cell int"
-    )
-    cq = query_cells.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
-        "cell",
-    )
-    cc = corpus_cells.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
-        "cell",
-    )
-    joined = cc.join(F.broadcast(cq), "cell")
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
-            6,
-        ).alias("cos_sim"),
-    ).distinct()  # a (query, neighbor) pair can meet in multiple probed cells
-    return _rank_topk(scored, k)
+    return c_mat, cells
 
 
 def ivf_topk_replayable(
@@ -605,30 +664,15 @@ def ivf_topk_replayable(
             .filter(F.col("__rn") <= keep_rn)
         )
 
-    cq = assign(queries, n_probe).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("__nrm").alias("q_norm"),
+    return _jvm_topk(
+        assign(queries, n_probe),
+        assign(corpus, 1),
+        k,
+        id_col,
+        vec_col,
         "cell",
+        exclude_self,
     )
-    cc = assign(corpus, 1).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("__nrm").alias("c_norm"),
-        "cell",
-    )
-    joined = cc.join(F.broadcast(cq), "cell")
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
-            6,
-        ).alias("cos_sim"),
-    ).distinct()  # a (query, neighbor) pair can meet in multiple probed cells
-    return _rank_topk(scored, k)
 
 
 def ivf_write_bucketed(
@@ -650,41 +694,8 @@ def ivf_write_bucketed(
     import json
     import os
 
-    import numpy as np
-
-    cent_rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(n_centroids)
-        .collect()
-    )
-    c_mat = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    c_mat /= np.linalg.norm(c_mat, axis=1, keepdims=True)
-    sc = corpus.sparkSession.sparkContext
-    bcent = sc.broadcast(c_mat)
-
-    def assign(batches):
-        import pandas as pd
-
-        cm = bcent.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)
-            m_n = m / np.linalg.norm(m, axis=1, keepdims=True)
-            cells = np.argsort(-(m_n @ cm.T), axis=1, kind="stable")[:, 0]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "cell": cells.astype("int32"),
-                }
-            )
-
-    assigned = corpus.select(id_col, vec_col).mapInPandas(
-        assign, f"{id_col} long, {vec_col} array<float>, cell int"
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
+    c_mat, cells = _ivf_quantizer(corpus, n_centroids, id_col, vec_col)
+    cells(corpus, 1).write.mode("overwrite").partitionBy("cell").parquet(path)
     with open(os.path.join(path, "_CENTROIDS.json"), "w") as fh:
         json.dump(c_mat.tolist(), fh)
     return c_mat.tolist()
@@ -709,8 +720,6 @@ def ivf_search_bucketed(
     import json
     import os
 
-    import numpy as np
-
     with open(os.path.join(path, "_CENTROIDS.json")) as fh:
         c_mat = np.array(json.load(fh), dtype=np.float64)
     q_rows = queries.select(id_col, vec_col).collect()
@@ -726,34 +735,10 @@ def ivf_search_bucketed(
     probed_cells = sorted({c for _, c in probe_pairs})
 
     corpus = spark.read.parquet(path).filter(F.col("cell").isin(probed_cells))
-    qdf = queries.sparkSession.createDataFrame(
-        probe_pairs, "query_id long, cell int"
-    ).join(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("q_vec"),
-            l2_norm(F.col(vec_col)).alias("q_norm"),
-        ),
-        "query_id",
-    )
-    cc = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        l2_norm(F.col(vec_col)).alias("c_norm"),
-        "cell",
-    )
-    joined = cc.join(F.broadcast(qdf), "cell")
-    if exclude_self:
-        joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = joined.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
-            6,
-        ).alias("cos_sim"),
-    ).distinct()
-    return _rank_topk(scored, k)
+    q_cells = queries.sparkSession.createDataFrame(
+        probe_pairs, f"{id_col} long, cell int"
+    ).join(queries.select(id_col, vec_col), id_col)
+    return _jvm_topk(q_cells, corpus, k, id_col, vec_col, "cell", exclude_self)
 
 
 def embedding_near_dups(
@@ -774,8 +759,6 @@ def embedding_near_dups(
     attested cosine_topk_arrow pattern). Skew note: a degenerate
     bucket lands on one task — split hot buckets with a secondary salt
     when bucket-size monitoring trips."""
-    import numpy as np
-
     b = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
@@ -783,8 +766,6 @@ def embedding_near_dups(
     )
 
     def per_bucket(pdf):
-        import pandas as pd
-
         if len(pdf) < 2:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "cos_sim": "float64"}
@@ -843,8 +824,6 @@ def mmr_select(
     semantic change (MMR's diversity term needs the true max over
     picked items), so an incomplete matrix raises a descriptive error
     instead of a bare executor-side KeyError."""
-    import pandas as pd
-
     def kernel(key, cand_pdf, pairs_pdf):
         qid = int(key[0])
         rel = dict(zip(cand_pdf["doc_id"].astype("int64"),

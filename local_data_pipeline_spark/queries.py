@@ -7217,7 +7217,7 @@ def pca_embedding_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — and the d×d eigendecomposition runs on the driver.
 
     Value-attested (graduated from rows-only in round 9, the
-    ridge_fit_exact exact-vs-flagged split): the covariance DIAGONAL —
+    ridge_fit exact-vs-flagged split): the covariance DIAGONAL —
     the 8 highest per-dimension variances and the exact-decimal total
     variance (trace) — hashes against a SQL replay, while the
     LAPACK-dependent eigenvalues collapse into a per-component
@@ -15295,10 +15295,10 @@ def _ridge_oracle(lam: float = 1.0) -> str:
 def ridge_length_model_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ridge regression (normal equations) predicting document length
     from cheap text features — token count, mean word length, stopword
-    hits — via operators/ml.ridge_fit_exact: ONE JVM hash aggregate
+    hits — via operators/ml.ridge_fit: ONE JVM hash aggregate
     reduces the corpus to exact-decimal XᵀX / Xᵀy sufficient statistics
-    (order-insensitive, unlike the float-partials Arrow path whose
-    last-ulp bits depend on partitioning), the driver solves the 4×4
+    (order-insensitive, so bit-identical at any partitioning), the
+    driver solves the 4×4
     system (λ=1, intercept unpenalized). The linear sibling of the IRLS
     quality classifier, and the shape any learned corpus-heuristic
     calibration takes at 100 TB: data crosses the wire once, as p²
@@ -15310,15 +15310,15 @@ def ridge_length_model_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors _det4_sql term-for-term since round 9), so the hashed
     coefficients are bit-identical cross-engine — a drifted feature
     definition, a lost sum, or a wrong ridge term fails the value
-    hash. Single-node parity for the float path stays pinned in
-    tests."""
+    hash. Parity with the single-node reference ml.ridge_fit_local is
+    pinned in tests."""
     import math
 
     from .operators import ml as ML
 
     d = _t(spark, sf_dir, "documents")
     feats = _ridge_length_features(d)
-    beta = ML.ridge_fit_exact(
+    beta = ML.ridge_fit(
         feats, ["n_words", "mean_wlen", "stop_hits"], "n_chars", lam=1.0
     )
     names = ["intercept", "n_words", "mean_wlen", "stop_hits"]
@@ -16148,7 +16148,7 @@ def ridge_kfold_cv_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE JVM hash aggregate, each fold's model formed by EXACT decimal
     SUBTRACTION from the total (leave-one-fold-out additivity), then
     one JVM scoring pass against each row's own held-out model
-    (operators/ml.ridge_kfold_cv_exact). Folds are the engine-identical
+    (operators/ml.ridge_kfold_cv). Folds are the engine-identical
     md5(doc_id) %% 5.
 
     Value-attested (graduated from rows-only in round 8, with the ridge
@@ -16156,9 +16156,7 @@ def ridge_kfold_cv_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtraction, solves each fold by the identical Cramer float-op
     order (ml.cramer_solve, round 9), and re-scores — so even the
     per-row se_micro agrees bit-for-bit; only the coarse (n_test,
-    milli-RMSE) output is hashed by convention. Exact parity of the
-    float-partials path against 5 independently-trained single-node
-    references stays pinned in pytest."""
+    milli-RMSE) output is hashed by convention."""
     from .operators import ml as ML
 
     d = _t(spark, sf_dir, "documents")
@@ -16171,7 +16169,7 @@ def ridge_kfold_cv_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(5),
         ),
     )
-    cv = ML.ridge_kfold_cv_exact(
+    cv = ML.ridge_kfold_cv(
         feats,
         ["n_words", "mean_wlen", "stop_hits"],
         "n_chars",
@@ -17738,9 +17736,10 @@ def _kcore_oracle_sql(k: int = 3, rounds: int = 6) -> str:
 def kcore_copurchase_query(k: int, rounds: int = 6):
     """Parameterized k-core query + matching unrolled-CTE oracle over
     the co-purchase graph. The declared catalog entry uses k=3 (954
-    survivors at sf0.01); the sf1 scale gate runs the k=2 variant via
+    survivors at sf0.01: the 6-round peel, which has not converged to
+    the 3-core there); the sf1 scale gate runs the k=2 variant via
     tools/gen_sf1_gate._scale_variants() because the sf1 co-purchase
-    graph's 3-core is EMPTY — a 0-row match attests nothing, so the
+    graph's 6-round k=3 peel is EMPTY — a 0-row match attests nothing, so the
     roster exercises the identical peel recurrence at a k whose core is
     non-empty (30 nodes at sf1, convergence re-verified: rounds 6 and 7
     agree)."""
@@ -17770,24 +17769,25 @@ _kcore3_fn, _kcore3_sql = kcore_copurchase_query(3, 6)
     tags=("graph", "iterative"),
 )
 def kcore_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-core of the co-purchase graph (operators/graph.py kcore):
-    iteratively peel parts with fewer than 3 still-alive co-purchase
-    partners — the dense backbone left when marginal nodes cascade away,
-    with each survivor's in-core degree. 6 fixed peel rounds, exactly
-    unrolled in the DuckDB twin (the hits/LPA oracle pattern: identical
-    recurrence, MATERIALIZED per level). Peeling is monotone, so the
-    fixed-round result is the true 3-core only where the peel converges
-    within the budget; pytest pins that on the sf0.001 test data. Larger
-    graphs need more rounds: the 5-, 6-, 7- and 8-round results hold
+    """6-round k=3 peel of the co-purchase graph (operators/graph.py
+    kcore), a SUPERSET of the 3-core wherever 6 rounds do not converge —
+    every scale above sf0.001: each round drops parts with fewer than 3
+    still-alive co-purchase partners; survivors carry their degree
+    within the peeled subgraph. The 5-, 6-, 7- and 8-round results hold
     965, 954, 946 and 940 parts at sf0.01 and 925, 916, 909 and 904 on
-    the benchmark's warehouse, and there the result is the 6-round peel
-    both engines compute.
+    the benchmark's warehouse, so the declared result is the 6-round
+    peel, not the core; the DuckDB twin unrolls the identical 6 rounds
+    (the hits/LPA oracle pattern: identical recurrence, MATERIALIZED per
+    level), so the value hash attests the peel both engines compute.
+    Peeling is monotone, so the result is the true 3-core only where a
+    round removes nothing within the budget; pytest pins that on the
+    sf0.001 test data only.
 
     Scale: one join+agg per round shuffled on the node key over a
     monotonically shrinking alive set; the support-≥2 HAVING collapses
     the edge set ~300x before any iteration (the shared
-    _copurchase_edges contract); lineage cut every round. At sf1
-    the 3-core is empty, so the scale gate attests the k=2 variant
+    _copurchase_edges contract); lineage cut every round. At sf1 the
+    6-round peel is empty, so the scale gate attests the k=2 variant
     (kcore_copurchase_query) instead of counting a 0-row match."""
     return _kcore3_fn(spark, sf_dir)
 

@@ -471,7 +471,7 @@ def test_ridge_kfold_rejects_null_inputs(spark):
         "fold int, x double, y double",
     )
     with pytest.raises(Exception, match="ridge_kfold_cv: NULL"):
-        ridge_kfold_cv(df, ["x"], "y", "fold", k=2).collect()
+        ridge_kfold_cv(df, ["x"], "y", "fold").collect()
 
 
 def test_viterbi_rejects_empty_vocab():

@@ -1,6 +1,7 @@
 """Round-12 (driver round 6) tests: tie-inclusive local pruning in the
-PQ search kernels, fail-fast guards (short PQ corpus, ridge NULLs), the
-S5 container-output linter rule, the sf1-roster note sanitizer, the
+Arrow top-k kernel (similarity._arrow_topk, which the PQ searches use),
+fail-fast guards (short PQ corpus, ridge NULLs), the S5 container-output
+linter rule, the sf1-roster note sanitizer, the
 bench driver-vs-local contention verdicts, and the banded fuzzy-join
 plan pin."""
 
@@ -9,10 +10,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from local_data_pipeline_spark.operators.pq import (
-    _tie_inclusive_prune,
     adc_topk,
+    exact_l2_topk,
     pq_encode,
     pq_train,
+)
+from local_data_pipeline_spark.operators.similarity import (
+    _tie_inclusive_prune,
+    brute_force_topk_arrow,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -22,43 +27,128 @@ SF = "/root/testdata/sf0.001"
 # tie-inclusive pruning
 # ---------------------------------------------------------------------
 
+def _kept(d, k):
+    """Kept column indices per row of the vectorized prune."""
+    return [set(np.flatnonzero(row).tolist()) for row in _tie_inclusive_prune(d, k)]
+
+
+def _prune_row(dq, k):
+    """Per-row reference: every finite entry <= the k-th smallest finite
+    entry, or every finite entry when there are at most k of them."""
+    finite = sorted(float(x) for x in dq if np.isfinite(x))
+    if len(finite) <= k:
+        return {i for i, x in enumerate(dq) if np.isfinite(x)}
+    return {i for i, x in enumerate(dq) if np.isfinite(x) and x <= finite[k - 1]}
+
+
 def test_tie_inclusive_prune_keeps_whole_tie_group():
     """Candidates tied at the k-th distance must ALL survive the local
     prune — argsort[:k] would keep an arbitrary partition-order subset."""
-    dq = np.array([5.0, 1.0, 3.0, 3.0, 3.0, 9.0])
-    keep = set(_tie_inclusive_prune(dq, k=2).tolist())
-    # k-th (2nd) smallest is 3.0 -> every 3.0 stays, plus the 1.0
-    assert keep == {1, 2, 3, 4}
+    d = np.array([
+        [5.0, 1.0, 3.0, 3.0, 3.0, 9.0],
+        [3.0, 3.0, 3.0, 3.0, 0.0, 1.0],
+    ])
+    # row 0: k-th (2nd) smallest is 3.0 -> every 3.0 stays, plus the 1.0;
+    # row 1: the 2nd smallest is 1.0, so no 3.0 survives
+    assert _kept(d, k=2) == [{1, 2, 3, 4}, {4, 5}]
 
 
 def test_tie_inclusive_prune_short_and_empty():
-    dq = np.array([2.0, np.inf, 1.0])
-    assert set(_tie_inclusive_prune(dq, k=10).tolist()) == {0, 2}
-    assert _tie_inclusive_prune(np.array([np.inf, np.inf]), k=3).size == 0
-    assert _tie_inclusive_prune(np.array([], dtype=float), k=3).size == 0
+    d = np.array([
+        [2.0, np.inf, 1.0],
+        [np.inf, np.inf, np.inf],
+        # NaN sorts last: with <= k finite entries the k-th value is NaN,
+        # which must keep every finite entry, not none of them
+        [np.nan, 4.0, np.nan],
+    ])
+    assert _kept(d, k=2) == [{0, 2}, set(), {1}]
+    assert _kept(d, k=10) == [{0, 2}, set(), {1}]
+    assert _tie_inclusive_prune(np.empty((1, 0)), k=3).sum() == 0
+
+
+def test_tie_inclusive_prune_matches_per_row_reference():
+    """Random matrices with heavy ties, +inf and NaN: the vectorized
+    prune keeps exactly what the per-row rule keeps."""
+    rng = np.random.default_rng(7)
+    for _ in range(200):
+        d = rng.integers(0, 6, size=(5, 12)).astype(float)
+        d[rng.random(d.shape) < 0.2] = np.inf
+        d[rng.random(d.shape) < 0.2] = np.nan
+        k = int(rng.integers(1, 8))
+        assert _kept(d, k) == [_prune_row(row, k) for row in d], (d, k)
+
+
+def test_topk_ranking_and_prune_only_in_the_kernel():
+    """The per-query ranking window and the per-partition prune are
+    written once, in similarity.py's top-k kernel: a second
+    ``partitionBy("query_id")`` or ``np.partition`` under operators/
+    would be a second copy of that decision."""
+    import ast
+    import os
+
+    ops = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "local_data_pipeline_spark",
+        "operators",
+    )
+    kernel = os.path.join(ops, "similarity.py")
+    tree = ast.parse(open(kernel, encoding="utf-8").read())
+    allowed = set()
+    for fn in tree.body:
+        if isinstance(fn, ast.FunctionDef) and fn.name in (
+            "_rank_topk",
+            "_tie_inclusive_prune",
+        ):
+            allowed.update(range(fn.lineno, fn.end_lineno + 1))
+    bad = []
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py"):
+            continue
+        path = os.path.join(ops, fname)
+        for i, line in enumerate(open(path, encoding="utf-8"), 1):
+            if ('partitionBy("query_id")' in line or "np.partition" in line) and not (
+                path == kernel and i in allowed
+            ):
+                bad.append(f"operators/{fname}:{i}")
+    assert not bad, "rank and prune through similarity's kernel:\n" + "\n".join(bad)
 
 
 def test_adc_topk_partition_invariant_under_distance_ties(spark):
     """Identical code tuples give bit-identical ADC distances; the final
     top-k must not depend on how the corpus is partitioned. Planted: 30
     vectors that all encode to the SAME codes (one cluster), so every
-    neighbor ties and only the (dist, neighbor_id) window order decides."""
+    neighbor ties and only the (dist, neighbor_id) window order decides.
+    The exact-L2 and cosine searches share ADC's Arrow kernel; they run
+    on all-ones vectors, whose scores are exact in floating point, so
+    there too every neighbor ties bit for bit."""
     cb = [
         [[0.0, 0.0], [100.0, 100.0]],
         [[0.0, 0.0], [100.0, 100.0]],
     ]
     rows = [(i, [0.1, 0.1, 0.1, 0.1]) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = df.filter(F.col("vec_id") == 0)
+    ones = spark.createDataFrame(
+        [(i, [1.0, 1.0, 1.0, 1.0]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    )
+    qs, ones_qs = df.filter(F.col("vec_id") == 0), ones.filter(F.col("vec_id") == 0)
+    searches = {
+        "adc_topk": (df, lambda c: adc_topk(qs, pq_encode(c, cb), cb, k=5)),
+        "exact_l2_topk": (ones, lambda c: exact_l2_topk(ones_qs, c, k=5)),
+        "brute_force_topk_arrow": (
+            ones,
+            lambda c: brute_force_topk_arrow(ones_qs, c, k=5),
+        ),
+    }
+    for name, (corpus, search) in searches.items():
 
-    def run(n_parts):
-        codes = pq_encode(df.repartition(n_parts), cb)
-        got = adc_topk(qs, codes, cb, k=5).collect()
-        return sorted((r.query_id, r.neighbor_id, r.rnk) for r in got)
+        def run(n_parts):
+            got = search(corpus.repartition(n_parts)).collect()
+            return sorted((r[0], r[1], r[3]) for r in got)
 
-    assert run(1) == run(7) == run(13)
-    # with every distance tied, the survivors are the 5 smallest ids > 0
-    assert [t[1] for t in run(7)] == [1, 2, 3, 4, 5]
+        assert run(1) == run(7) == run(13), name
+        # with every score tied, the survivors are the 5 smallest ids > 0
+        assert [t[1] for t in run(7)] == [1, 2, 3, 4, 5], name
 
 
 def test_pq_train_raises_on_short_corpus(spark):

@@ -418,11 +418,9 @@ def test_broken_index_fails_measured_band_floors(spark):
     old absolute floors (lsh >= 0.02) were near-vacuous exactly because
     random retrieval clears them at small n."""
     from local_data_pipeline_spark.operators.similarity import (
-        _rank_topk,
+        _jvm_topk,
         brute_force_topk,
-        l2_norm,
     )
-    from local_data_pipeline_spark.functions.vectors import dot
     from local_data_pipeline_spark.queries import (
         _ann_recall_flags,
         _ann_recall_floors,
@@ -438,36 +436,15 @@ def test_broken_index_fails_measured_band_floors(spark):
         .persist()
     )
     nq = qs.count()
-    sides = emb.select(
+    bucket = F.col("vec_id") % 64
+    broken = _jvm_topk(
+        qs.withColumn("bucket", bucket),
+        emb.withColumn("bucket", bucket),
+        10,
         "vec_id",
         "embedding",
-        l2_norm(F.col("embedding")).alias("nrm"),
-        (F.col("vec_id") % 64).alias("bucket"),
+        "bucket",
     )
-    bq = (
-        sides.join(qs.select(F.col("vec_id").alias("qid")),
-                   F.col("vec_id") == F.col("qid"))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_vec"),
-            F.col("nrm").alias("q_norm"),
-            "bucket",
-        )
-    )
-    scored = (
-        sides.join(F.broadcast(bq), "bucket")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot(F.col("q_vec"), F.col("embedding"))
-                / (F.col("q_norm") * F.col("nrm")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    broken = _rank_topk(scored, 10)
     hits = (
         broken.select("query_id", "neighbor_id")
         .join(truth, ["query_id", "neighbor_id"])

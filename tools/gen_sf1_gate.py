@@ -19,12 +19,18 @@ Usage:
         # incremental: runs just those queries and MERGES their rows
         # into the existing roster (for queries added mid-round, so a
         # full 40-60 min re-sweep isn't needed twice per round)
+
+Each row is written as soon as its query finishes, so a sweep that is
+killed midway keeps its finished rows; ``--only <the rest>`` resumes it.
+DuckDB runs in the same process as the Spark driver and is capped at a
+quarter of the host's RAM.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 import time
 
@@ -89,9 +95,10 @@ def _scale_variants():
         "kcore_copurchase_parts": (
             k2_fn,
             k2_sql,
-            "k=2 at sf1 (declared k=3 core is EMPTY at this scale — a "
-            "0-row match attests nothing; k=3 non-vacuous at sf0.01 "
-            "with 954 rows)",
+            "k=2 at sf1 (declared k=3 6-round peel is EMPTY at this "
+            "scale — a 0-row match attests nothing; k=3 non-vacuous at "
+            "sf0.01 with 954 rows, the 6-round peel: a superset of the "
+            "3-core, which needs more rounds there)",
         ),
     }
 
@@ -107,6 +114,59 @@ def _note(s: str) -> str:
 #: the --only merge parser; module-level so tests can pin that any
 #: _note()-sanitized row round-trips through it
 ROW_RE = r"\| (\S+) \| (PASS|FAIL|EXCLUDED) \| ([\d.]+) \| (.*) \|$"
+
+
+def _duck_memory_limit() -> str:
+    """DuckDB's memory cap for the gate: a quarter of the host's RAM.
+    DuckDB defaults to 80 %, but here it shares the process with the
+    Spark driver JVM, and the two together can exceed the host and get
+    the gate killed by the kernel mid-sweep."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 4 // 2**20}MB"
+
+
+def _read_roster(path: str) -> dict[str, tuple[str, str, float, str]]:
+    """The rows of an existing roster, by query name."""
+    rows: dict[str, tuple[str, str, float, str]] = {}
+    if not os.path.exists(path):
+        return rows
+    with open(path) as fh:
+        for line in fh:
+            m = re.match(ROW_RE, line.strip())
+            if m:
+                rows[m.group(1)] = (
+                    m.group(1), m.group(2), float(m.group(3)), m.group(4)
+                )
+    return rows
+
+
+def _write_roster(
+    path: str, rows: list[tuple[str, str, float, str]], sf_dir: str
+) -> dict[str, int]:
+    """Write the roster atomically (a kill mid-write leaves the previous
+    file); returns the status counts."""
+    n = {"PASS": 0, "FAIL": 0, "EXCLUDED": 0}
+    for _, status, _, _ in rows:
+        n[status] += 1
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(
+            "# SF1 scale-gate roster\n\n"
+            "Generated by `python tools/gen_sf1_gate.py` — the committed "
+            "included/excluded list of the 10x-scale oracle sweep "
+            f"(data: `{sf_dir}`, regenerate with "
+            "`python tools/gen_scaled_data.py 10 /tmp/sf1`).\n\n"
+            f"**{n['PASS']} oracle PASS, "
+            f"{n['FAIL']} FAIL, {n['EXCLUDED']} excluded "
+            f"(of {len(rows)}).** Exclusions are queries whose DuckDB twin "
+            "is superlinear at sf1 — the Spark side runs fine; each was "
+            "PASS-verified once at full scale (wall times in the notes).\n\n"
+            "| query | status | sec | note |\n|---|---|---:|---|\n"
+        )
+        for name, status, sec, note in rows:
+            fh.write(f"| {name} | {status} | {sec:.1f} | {_note(note)} |\n")
+    os.replace(tmp, path)
+    return n
 
 
 def main() -> int:
@@ -133,12 +193,7 @@ def main() -> int:
     from local_data_pipeline_spark.session import get_spark
     from tools.check_oracle import check_query, duck_views
 
-    spark = get_spark(app_name="sf1_gate")
-    con = duck_views(args.sf_dir)
     qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    variants = _scale_variants()
-
     todo = qs if args.only is None else {
         n: qs[n] for n in args.only if n in qs
     }
@@ -148,68 +203,44 @@ def main() -> int:
             print(f"unknown queries: {missing}", file=sys.stderr)
             return 2
 
-    rows: list[tuple[str, str, float, str]] = []  # name, status, sec, note
+    spark = get_spark(app_name="sf1_gate")
+    con = duck_views(args.sf_dir)
+    con.execute(f"SET memory_limit = '{_duck_memory_limit()}'")
+    oracles = entrymod.oracle_sql()
+    variants = _scale_variants()
+
+    # every finished row is written at once, so a sweep killed midway
+    # keeps its rows and ``--only`` resumes it; --only merges into the
+    # existing roster, a full sweep starts a fresh one
+    done = _read_roster(args.out) if args.only is not None else {}
     n = {"PASS": 0, "FAIL": 0, "EXCLUDED": 0}
     for name, fn in todo.items():
         if name in EXCLUDED:
-            rows.append((name, "EXCLUDED", 0.0, EXCLUDED[name]))
-            n["EXCLUDED"] += 1
+            done[name] = (name, "EXCLUDED", 0.0, EXCLUDED[name])
             print(f"SKIP  {name}")
-            continue
-        variant_note = ""
-        oracle_sql_override = None
-        if name in variants:
-            fn, oracle_sql_override, variant_note = variants[name]
-            variant_note = " — " + variant_note
-        t0 = time.perf_counter()
-        try:
-            ok, msg = check_query(
-                spark, con, fn, oracle_sql_override or oracles[name], args.sf_dir
-            )
-        except Exception as e:  # noqa: BLE001 - roster records the error
-            ok, msg = False, f"error: {str(e)[:160]}"
-        dt = time.perf_counter() - t0
-        rows.append((name, "PASS" if ok else "FAIL", dt,
-                     _note((msg if ok else msg[:160]) + variant_note)))
-        n["PASS" if ok else "FAIL"] += 1
-        print(f"{'PASS' if ok else 'FAIL'}  {name} [{dt:.1f}s]")
-
-    if args.only is not None and os.path.exists(args.out):
-        # merge into the existing roster: parse its table rows, overlay
-        # the fresh results, and emit in current catalog order
-        import re
-
-        existing: dict[str, tuple[str, str, float, str]] = {}
-        for line in open(args.out):
-            m = re.match(ROW_RE, line.strip())
-            if m:
-                existing[m.group(1)] = (
-                    m.group(1), m.group(2), float(m.group(3)), m.group(4)
+        else:
+            variant_note = ""
+            oracle_sql_override = None
+            if name in variants:
+                fn, oracle_sql_override, variant_note = variants[name]
+                variant_note = " — " + variant_note
+            t0 = time.perf_counter()
+            try:
+                ok, msg = check_query(
+                    spark, con, fn, oracle_sql_override or oracles[name],
+                    args.sf_dir,
                 )
-        for r in rows:
-            existing[r[0]] = r
-        rows = [existing[name] for name in qs if name in existing]
-        n = {"PASS": 0, "FAIL": 0, "EXCLUDED": 0}
-        for _, status, _, _ in rows:
-            n[status] += 1
-
-    total = len(rows)
-    with open(args.out, "w") as fh:
-        fh.write(
-            "# SF1 scale-gate roster\n\n"
-            "Generated by `python tools/gen_sf1_gate.py` — the committed "
-            "included/excluded list of the 10x-scale oracle sweep "
-            f"(data: `{args.sf_dir}`, regenerate with "
-            "`python tools/gen_scaled_data.py 10 /tmp/sf1`).\n\n"
-            f"**{n['PASS']} oracle PASS, "
-            f"{n['FAIL']} FAIL, {n['EXCLUDED']} excluded "
-            f"(of {total}).** Exclusions are queries whose DuckDB twin "
-            "is superlinear at sf1 — the Spark side runs fine; each was "
-            "PASS-verified once at full scale (wall times in the notes).\n\n"
-            "| query | status | sec | note |\n|---|---|---:|---|\n"
+            except Exception as e:  # noqa: BLE001 - roster records the error
+                ok, msg = False, f"error: {str(e)[:160]}"
+            dt = time.perf_counter() - t0
+            done[name] = (name, "PASS" if ok else "FAIL", dt,
+                          _note((msg if ok else msg[:160]) + variant_note))
+            print(f"{'PASS' if ok else 'FAIL'}  {name} [{dt:.1f}s]")
+        # emit in current catalog order
+        n = _write_roster(
+            args.out, [done[q] for q in qs if q in done], args.sf_dir
         )
-        for name, status, sec, note in rows:
-            fh.write(f"| {name} | {status} | {sec:.1f} | {_note(note)} |\n")
+
     print(f"\nwrote {args.out}: {n}")
     return 1 if n["FAIL"] else 0
 

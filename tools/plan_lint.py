@@ -153,21 +153,11 @@ S4_ALLOWLIST: dict[tuple[str, str], str] = {
         "relation."
     ),
     ("ml.py", "ridge_fit"): (
-        "collects the (p+1)^2 normal-equation sufficient statistic "
-        "(p = feature count, a model constant) from ONE corpus pass; "
-        "the driver solves a p x p system."
-    ),
-    ("ml.py", "ridge_kfold_cv"): (
-        "collects k * (p+1)^2 per-fold sufficient statistics (k and p "
-        "are model constants) from ONE corpus pass; the driver solves "
-        "k leave-one-fold-out systems by statistic subtraction."
-    ),
-    ("ml.py", "ridge_fit_exact"): (
         "collects ONE row of (p+1)(p+2)/2 + (p+1) exact-decimal "
         "sufficient sums (p = feature count, a model constant) from one "
         "JVM hash aggregate; the driver solves a p x p system."
     ),
-    ("ml.py", "ridge_kfold_cv_exact"): (
+    ("ml.py", "ridge_kfold_cv"): (
         "collects k rows of exact-decimal per-fold sufficient sums (k "
         "and p are model constants) from one JVM hash aggregate; the "
         "driver forms k leave-one-fold-out systems by exact decimal "
@@ -198,19 +188,17 @@ S4_ALLOWLIST: dict[tuple[str, str], str] = {
         "collects a single global (keyless) aggregate row — the "
         "convergence metric."
     ),
-    ("similarity.py", "brute_force_topk_arrow"): (
-        "collects the QUERY-side vectors under the operator's documented "
-        "small-side contract (they broadcast into the per-partition BLAS "
-        "matmul); unbounded query sets go through lsh_topk/ivf_topk."
+    ("similarity.py", "_arrow_topk"): (
+        "collects the QUERY-side vectors of brute_force_topk_arrow, "
+        "pq.exact_l2_topk and pq.adc_topk under their documented "
+        "small-side contract (they broadcast into the per-partition "
+        "score matrix); unbounded query sets go through lsh_topk/ivf_topk."
     ),
-    ("similarity.py", "ivf_topk"): (
+    ("similarity.py", "_ivf_quantizer"): (
         "collects n_centroids seed vectors (a config constant) for the "
-        "broadcast IVF codebook; assignment and search stay distributed."
-    ),
-    ("similarity.py", "ivf_write_bucketed"): (
-        "collects n_centroids seed vectors (a config constant) for the "
-        "persisted codebook sidecar; assignment and the partitioned "
-        "write stay distributed."
+        "IVF codebook that ivf_topk broadcasts and ivf_write_bucketed "
+        "also persists; assignment, search and the partitioned write "
+        "stay distributed."
     ),
     ("similarity.py", "ivf_search_bucketed"): (
         "collects the QUERY-side vectors (small-side contract) to pick "
@@ -221,15 +209,6 @@ S4_ALLOWLIST: dict[tuple[str, str], str] = {
         "collects k init vectors and, per Lloyd iteration, the "
         "m*k*(d/m) codebook sufficient statistic (all model constants); "
         "the corpus passes stay distributed."
-    ),
-    ("pq.py", "exact_l2_topk"): (
-        "collects the QUERY-side vectors (small-side contract, same as "
-        "brute_force_topk_arrow) to build the recall ground truth."
-    ),
-    ("pq.py", "adc_topk"): (
-        "collects the QUERY-side vectors to build the broadcast ADC "
-        "lookup tables (small-side contract, same as "
-        "brute_force_topk_arrow); the codes corpus streams."
     ),
 }
 
