@@ -1,7 +1,13 @@
 """Deduplication operators for training-data pipelines, 100 TB-first.
 
-Five dedup families (SURVEY §2.E1-E2), all pure DataFrame/Catalyst — no
-Python UDFs, so every stage is codegen'd and shuffle volumes are explicit:
+Five dedup families (SURVEY §2.E1-E2), DataFrame/Catalyst throughout
+with no row-at-a-time Python UDFs, so shuffle volumes are explicit; the
+one Python stage is the Arrow winnowing path
+(``winnowing_fingerprints_arrow``, a ``mapInPandas``). Every candidate
+generator pairs ids through one kernel, :func:`shared_key_pairs` (the
+shared-key self-join with ordered ids, a shared-key count and an
+optional hot-key cap), which the prefix-filter set join (setjoin.py)
+and the co-purchase and overlap queries use too:
 
 - **exact**: group by content fingerprint, keep canonical row. One shuffle
   on a 128-bit hash — perfectly balanced by construction.
@@ -26,6 +32,8 @@ signatures are stable across runs, partitionings, and cluster sizes.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -54,6 +62,58 @@ def exact_dedup(
         with_fp.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
+    )
+
+
+# ------------------------------------------------------ shared-key pairs
+def shared_key_pairs(
+    rel: DataFrame,
+    id_col: str,
+    keys: Sequence[str],
+    max_key_rows: int | None = None,
+) -> DataFrame:
+    """The pair self-join every candidate generator here runs: from a
+    distinct (id, key...) relation, every pair of ids that share a key
+    value, as (id_a, id_b, n_shared) with id_a < id_b and ``n_shared``
+    the number of joined rows (shared key values) per pair. Any other
+    column of ``rel`` rides through as ``<c>_a`` / ``<c>_b`` (it must
+    be a function of the id: the pair groups by it).
+
+    ``max_key_rows`` is the hot-key guard: a key held by n rows emits
+    n² pairs, so key values with more than ``max_key_rows`` rows in
+    ``rel`` AS GIVEN are dropped before the join (the LSH jumbo-bucket
+    and MOSS stop-fingerprint rule). None keeps every key.
+
+    Each side renames the id (``id_a`` / ``id_b``) and the two sides
+    equi-join by key NAME, so no condition compares one attribute of
+    the shared frame with itself. Scale shape: one exchange on the keys
+    (none if ``rel`` is already partitioned on them), then one pair
+    aggregate. ``rel`` is read by both sides (and the cap), so pass it
+    cheap to recompute or checkpointed."""
+    keys = list(keys)
+    if max_key_rows is not None:
+        small = (
+            rel.groupBy(*keys)
+            .agg(F.count("*").alias("__n"))
+            .filter(F.col("__n") <= max_key_rows)
+            .select(*keys)
+        )
+        rel = rel.join(small, keys)
+    carried = [c for c in rel.columns if c != id_col and c not in keys]
+
+    def side(s: str) -> DataFrame:
+        return rel.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *keys,
+            *[F.col(c).alias(f"{c}_{s}") for c in carried],
+        )
+
+    return (
+        side("a")
+        .join(side("b"), keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b", *[f"{c}_{s}" for c in carried for s in "ab"])
+        .agg(F.count("*").alias("n_shared"))
     )
 
 
@@ -267,29 +327,11 @@ def banded_candidate_pairs(
     the banded relation as state and must not re-derive it from
     signatures. Bucket-cap semantics identical: bucket sizes are
     counted on the relation AS GIVEN, buckets above the cap are
-    skipped."""
-    if max_bucket_size is not None:
-        small = (
-            banded.groupBy("band", "band_hash")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .select("band", "band_hash")
-        )
-        banded = banded.join(small, ["band", "band_hash"])
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    skipped (:func:`shared_key_pairs`' key cap)."""
+    keys = ["band", "band_hash"]
+    return shared_key_pairs(
+        banded.select(id_col, *keys), id_col, keys, max_bucket_size
+    ).select("id_a", "id_b")
 
 
 def jaccard_pairs(
@@ -337,33 +379,18 @@ def shingle_jaccard(
     if threshold <= 0:
         raise ValueError("threshold must be > 0 (jaccard-0 pairs are not emitted)")
     sizes = shingles.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    ex_a = shingles.select(
-        F.col(id_col).alias("id_a"),
-        *([F.col(block_by).alias("blk")] if block_by else []),
-        F.col("sh"),
-    )
-    ex_b = shingles.select(
-        F.col(id_col).alias("id_b"),
-        *([F.col(block_by).alias("blk")] if block_by else []),
-        F.col("sh"),
-    )
     if pairs is not None:
         inter = (
-            pairs.join(ex_a, "id_a")
-            .join(ex_b.drop(*(["blk"] if block_by else [])), ["id_b", "sh"])
+            pairs.join(shingles.select(F.col(id_col).alias("id_a"), "sh"), "id_a")
+            .join(shingles.select(F.col(id_col).alias("id_b"), "sh"), ["id_b", "sh"])
             .groupBy("id_a", "id_b")
             .agg(F.count("*").alias("n_inter"))
         )
     else:
-        # equi-join by column NAME: both sides project one frame, so an
-        # ex_a["sh"] == ex_b["sh"] condition would compare one attribute
-        # with itself and lean on the analyzer to untangle the self-join
-        inter = (
-            ex_a.join(ex_b, ["sh", "blk"] if block_by else ["sh"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("n_inter"))
-        )
+        keys = ["sh", *([block_by] if block_by else [])]
+        inter = shared_key_pairs(
+            shingles.select(id_col, *keys), id_col, keys
+        ).withColumnRenamed("n_shared", "n_inter")
     sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
     jac = F.round(
@@ -627,22 +654,8 @@ def winnowing_overlap_pairs(
         .localCheckpoint(eager=False)
         .repartition(cores * 2, "fingerprint")
     )
-    if max_df is not None:
-        rare = (
-            fps.groupBy("fingerprint")
-            .agg(F.count("*").alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select("fingerprint")
-        )
-        fps = fps.join(rare, "fingerprint")
-    a = fps.select(F.col(id_col).alias("id_a"), "fingerprint")
-    b = fps.select(F.col(id_col).alias("id_b"), "fingerprint")
-    return (
-        a.join(b, ["fingerprint"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+    return shared_key_pairs(fps, id_col, ["fingerprint"], max_df).filter(
+        F.col("n_shared") >= min_shared
     )
 
 
@@ -775,22 +788,10 @@ def banded_hamming_pairs(
             )
         ).alias("bc"),
     ).select(id_col, hash_col, "bc.band", "bc.chunk")
-    a, b = banded.alias("a"), banded.alias("b")
+    hamming = hamming64(F.col(f"{hash_col}_a"), F.col(f"{hash_col}_b"))
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming64(F.col(f"a.{hash_col}"), F.col(f"b.{hash_col}")).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
+        shared_key_pairs(banded, id_col, ["band", "chunk"])
+        .select("id_a", "id_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 

@@ -22,12 +22,21 @@ from pyspark.sql import functions as F
 OrderSpec = "str | tuple[str, str]"
 
 
-def _order_exprs(order_cols: Sequence[str | tuple[str, str]]) -> list[Column]:
+def _order_exprs(
+    order_col: str | tuple[str, str] | Sequence[str | tuple[str, str]],
+) -> list[Column]:
     """SortOrder expressions for both ``repartitionByRange`` and
     ``Window.orderBy`` — the two MUST agree, or shard ids stop being
-    contiguous under the window's order and the offset math breaks."""
+    contiguous under the window's order and the offset math breaks.
+    ``order_col`` is one ordering key or a sequence of them."""
+    single = isinstance(order_col, str) or (
+        isinstance(order_col, tuple)
+        and len(order_col) == 2
+        and all(isinstance(e, str) for e in order_col)
+        and order_col[1] in ("asc", "desc")
+    )
     out: list[Column] = []
-    for spec in order_cols:
+    for spec in [order_col] if single else order_col:
         if isinstance(spec, str):
             out.append(F.col(spec).asc())
         else:
@@ -38,6 +47,17 @@ def _order_exprs(order_cols: Sequence[str | tuple[str, str]]) -> list[Column]:
                 F.col(name).desc() if direction == "desc" else F.col(name).asc()
             )
     return out
+
+
+def _shard_count(df: DataFrame, n_partitions: int | None) -> int:
+    """``n_partitions``, else the session's configured shuffle width —
+    the same knob every other exchange in the job uses (clusters set it
+    to match executor count; AQE coalesces small shards). A fixed
+    constant either under-shards a cluster or pays needless task
+    dispatch on a 15k-row local input."""
+    if n_partitions is not None:
+        return n_partitions
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 def distributed_cumsum(
@@ -68,23 +88,10 @@ def distributed_cumsum(
     guarantees ONE materialization of the sampled partitioning shared
     by the offsets subtree and the main join.
     """
-    def _is_single_spec(x: object) -> bool:
-        return isinstance(x, str) or (
-            isinstance(x, tuple)
-            and len(x) == 2
-            and all(isinstance(e, str) for e in x)
-            and x[1] in ("asc", "desc")
-        )
-
-    order_cols = [order_col] if _is_single_spec(order_col) else list(order_col)
-    sort_exprs = _order_exprs(order_cols)
-    if n_partitions is None:
-        n_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    ranged = df.repartitionByRange(n_partitions, *sort_exprs).withColumn(
-        "__shard", F.spark_partition_id()
-    )
+    sort_exprs = _order_exprs(order_col)
+    ranged = df.repartitionByRange(
+        _shard_count(df, n_partitions), *sort_exprs
+    ).withColumn("__shard", F.spark_partition_id())
     w_in = (
         Window.partitionBy("__shard")
         .orderBy(*sort_exprs)
@@ -129,35 +136,17 @@ def _distributed_cumsum_with_total(
     order_col: str | Sequence[str],
     value_col: str,
     out_col: str,
-    n_partitions: int,
+    n_partitions: int | None,
 ) -> tuple[DataFrame, int]:
     """Collecting cumsum variant: also returns the grand total (already
     on the driver from the shard-totals collect). Used ONLY by callers
     that genuinely need n on the driver (distributed_ntile's bucket
     formula); plain distributed_cumsum/distributed_rank compute the
     offsets in-plan instead (round 11 — no construction-time collect)."""
-    def _is_single_spec(x: object) -> bool:
-        return isinstance(x, str) or (
-            isinstance(x, tuple)
-            and len(x) == 2
-            and all(isinstance(e, str) for e in x)
-            and x[1] in ("asc", "desc")
-        )
-
-    order_cols = [order_col] if _is_single_spec(order_col) else list(order_col)
-    sort_exprs = _order_exprs(order_cols)
-    if n_partitions is None:
-        # Size shards from the session's configured shuffle width — the
-        # same knob every other exchange in the job uses (clusters set it
-        # to match executor count; AQE coalesces small shards). A fixed
-        # constant either under-shards a cluster or pays needless task
-        # dispatch on a 15k-row local input.
-        n_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    ranged = df.repartitionByRange(n_partitions, *sort_exprs).withColumn(
-        "__shard", F.spark_partition_id()
-    )
+    sort_exprs = _order_exprs(order_col)
+    ranged = df.repartitionByRange(
+        _shard_count(df, n_partitions), *sort_exprs
+    ).withColumn("__shard", F.spark_partition_id())
     w_in = (
         Window.partitionBy("__shard")
         .orderBy(*sort_exprs)
@@ -211,7 +200,7 @@ def _distributed_rank_with_count(
     df: DataFrame,
     order_cols: Sequence[str],
     out_col: str,
-    n_partitions: int,
+    n_partitions: int | None,
 ) -> tuple[DataFrame, int]:
     ones = df.withColumn("__one", F.lit(1).cast("bigint"))
     ranked, n = _distributed_cumsum_with_total(
@@ -275,13 +264,9 @@ def distributed_lead(
     like the native window."""
     if value_col is None:
         value_col = order_col
-    if n_partitions is None:
-        n_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    ranged = df.repartitionByRange(n_partitions, F.col(order_col)).withColumn(
-        "__shard", F.spark_partition_id()
-    )
+    ranged = df.repartitionByRange(
+        _shard_count(df, n_partitions), F.col(order_col)
+    ).withColumn("__shard", F.spark_partition_id())
     w = Window.partitionBy("__shard").orderBy(order_col)
     # Materialize once (range boundaries come from sampling): the firsts
     # collect and the final join must see the same shard assignment.

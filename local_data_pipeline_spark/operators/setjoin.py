@@ -13,8 +13,9 @@ Scale shape: the global order sorts tokens by ascending corpus
 frequency, so the join keys are each document's RAREST tokens — the
 skew defense is built into the algorithm (frequent tokens land outside
 prefixes). The frequency relation is vocabulary-sized (broadcast); the
-only wide shuffle is the candidate join keyed by rare tokens; the
-verify is a per-pair codegen expression.
+only wide shuffle is the candidate join keyed by rare tokens, run by
+the pair kernel the dedup candidate generators share
+(dedup.shared_key_pairs); the verify is a per-pair codegen expression.
 
 Reference scope: the reference has no similarity operators (SURVEY.md
 §2 ends at a window argmax); extension surface per BASELINE.json.
@@ -26,6 +27,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import shared_key_pairs
 
 
 def prefix_filter_jaccard_join(
@@ -79,19 +82,11 @@ def prefix_filter_jaccard_join(
     pref = ordered.select(
         *keep,
         "__id",
-        "__toks",
         F.explode(F.slice("__sorted", 1, F.greatest(plen, F.lit(1)))).alias("__pt"),
     )
-    a = pref.alias("a")
-    b = pref.alias("b")
-    join_cond = (F.col("a.__pt") == F.col("b.__pt")) & (
-        F.col("a.__id") < F.col("b.__id")
-    )
-    if block_col:
-        join_cond = join_cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    # candidate pairs carry NO arrays: dedup the (id_a, id_b) pairs
-    # first (a pair sharing several prefix tokens appears once per
-    # shared token), then join each side's token array back by id for
+    # candidate pairs carry NO arrays: the kernel dedups the (id_a,
+    # id_b) pairs (a pair sharing several prefix tokens appears once per
+    # shared token), then each side's token array joins back by id for
     # ONE exact verify per pair. Measured on the dense-vocabulary
     # fixture at sf0.1: 2.1 s warm vs 6.4 s for verify-before-dedup
     # (every duplicate candidate paid the intersect) and ~2 s for
@@ -99,17 +94,9 @@ def prefix_filter_jaccard_join(
     # wide exploded join and the dedup exchange move only three small
     # columns, which is what matters when arrays are documents, not
     # 40-token fixtures.
-    cand = (
-        a.join(b, join_cond)
-        .select(
-            *([F.col(f"a.{block_col}").alias(block_col)] if block_col else []),
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    cand = shared_key_pairs(pref, "__id", ["__pt", *keep]).select("id_a", "id_b")
     ta = ordered.select(
-        F.col("__id").alias("id_a"), F.col("__toks").alias("__ta")
+        *keep, F.col("__id").alias("id_a"), F.col("__toks").alias("__ta")
     )
     tb = ordered.select(
         F.col("__id").alias("id_b"), F.col("__toks").alias("__tb")

@@ -142,10 +142,14 @@ def _jvm_topk(
     Catalyst search operator shares. The query side is broadcast against
     the corpus side: a cross join, or an equi-join on the candidate key
     ``on`` (an LSH bucket, an IVF cell) that both sides carry. Self pairs
-    are dropped, the cosine is rounded to 6 places (so ranking is
-    reproducible cross-engine) and :func:`_rank_topk` ranks it. Norms are
-    per-ROW columns before the join; inside the pair expression they
-    would be recomputed once per pair.
+    and pairs with a zero-norm side are dropped (a zero vector has no
+    cosine; :func:`_arrow_topk` drops its NaN scores the same way), the
+    cosine is rounded to 6 places (so ranking is reproducible
+    cross-engine) and :func:`_rank_topk` ranks it. Norms are per-ROW
+    columns before the join; inside the pair expression they would be
+    recomputed once per pair. The zero-norm test reads both norms, so it
+    stays in the join condition: a per-side filter would be pushed below
+    the projection and compute every norm twice.
 
     With ``label_col`` both sides carry their label through as
     ``own_label`` / ``nb_label``; ``exclude_same_label=True`` keeps only
@@ -174,6 +178,7 @@ def _jvm_topk(
     q = F.broadcast(queries.select(*q_cols))
     c = corpus.select(*c_cols)
     joined = c.join(q, how="cross") if on is None else c.join(q, on)
+    joined = joined.filter(F.col("q_norm") * F.col("c_norm") > 0)
     if exclude_self:
         joined = joined.filter(F.col("query_id") != F.col("neighbor_id"))
     if exclude_same_label:
@@ -279,7 +284,10 @@ def brute_force_topk(
 
     With ``label_col`` set, both sides carry their label through as
     ``own_label`` / ``nb_label``; ``exclude_same_label=True`` restricts
-    candidates to different-label vectors (hard-negative mining)."""
+    candidates to different-label vectors (hard-negative mining).
+
+    A zero-norm vector has no cosine: it never appears as a neighbor
+    and, as a query, gets no rows (as in ``brute_force_topk_arrow``)."""
     return _jvm_topk(
         queries,
         corpus,
@@ -307,7 +315,10 @@ def brute_force_topk_arrow(
     the pure-DataFrame ``brute_force_topk`` pays per-element overhead on
     every pair. Here :func:`_arrow_topk` scores each corpus partition in
     one BLAS matmul. Results match ``brute_force_topk`` to the same
-    6-decimal rounding."""
+    6-decimal rounding.
+
+    A zero-norm vector has no cosine: it never appears as a neighbor
+    and, as a query, gets no rows (as in ``brute_force_topk``)."""
 
     def cosine6(qs, vecs):
         qm, qn = qs

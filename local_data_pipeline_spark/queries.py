@@ -6395,11 +6395,9 @@ def co_purchase_lift_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         op.agg(F.count_distinct("ok").cast("bigint").alias("n_orders"))
     )
     pc = op.groupBy("pk").agg(F.count("*").alias("c"))
-    a, b = op.alias("a"), op.alias("b")
     pairs = (
-        a.join(b, (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")))
-        .groupBy(F.col("a.pk").alias("p1"), F.col("b.pk").alias("p2"))
-        .agg(F.count("*").alias("n_both"))
+        DD.shared_key_pairs(op, "pk", ["ok"])
+        .toDF("p1", "p2", "n_both")
         .filter(F.col("n_both") >= 3)
     )
     ca = pc.select(F.col("pk").alias("p1"), F.col("c").alias("c1"))
@@ -6702,33 +6700,27 @@ _COPURCHASE_PAIRS_SQL = """items AS (SELECT DISTINCT l_orderkey, l_partkey FROM 
       FROM items a JOIN items b
         ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
       GROUP BY 1, 2 HAVING count(*) >= 2)"""
-#: Shared CTE prefix: the support->=2 co-purchase pair set. Used by BOTH
-#: the triangle and the label-propagation oracles so the edge definition
-#: cannot silently desynchronize from the Spark twin below.
+#: Shared CTE prefix: the support->=2 co-purchase pair set. Every
+#: co-purchase graph oracle (triangle, pagerank, label propagation,
+#: modularity LPA, kcore) uses it, so the edge definition cannot
+#: silently desynchronize from the Spark twin below.
 
 
 def _copurchase_edges(li: DataFrame) -> DataFrame:
     """Support-≥2 co-purchase part pairs (pa < pb): parts bought together
     in at least 2 orders. THE shared edge set for the co-purchase graph
-    family (triangle_count_copurchase, label_propagation_copurchase) —
-    one definition, one SQL twin (_COPURCHASE_PAIRS_SQL), so a support
-    or dedup change propagates everywhere or nowhere. The HAVING
-    collapses the pair set ~300× before any downstream quadratic/
-    iterative work (1.2M raw pair instances → 3.6k edges at sf0.1)."""
+    family (triangle_count_copurchase, pagerank_copurchase_parts,
+    label_propagation_copurchase, modularity_lpa_copurchase,
+    kcore_copurchase_parts) — one definition, one SQL twin
+    (_COPURCHASE_PAIRS_SQL), so a support or dedup change propagates
+    everywhere or nowhere. The HAVING collapses the pair set ~300×
+    before any downstream quadratic/iterative work (1.2M raw pair
+    instances → 3.6k edges at sf0.1)."""
     items = li.select("l_orderkey", "l_partkey").distinct()
-    a, b = items.alias("a"), items.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("pa"), F.col("b.l_partkey").alias("pb")
-        )
-        .agg(F.count("*").alias("c"))
-        .filter(F.col("c") >= 2)
-        .select("pa", "pb")
+        DD.shared_key_pairs(items, "l_partkey", ["l_orderkey"])
+        .filter(F.col("n_shared") >= 2)
+        .select(F.col("id_a").alias("pa"), F.col("id_b").alias("pb"))
     )
 
 
@@ -6819,20 +6811,10 @@ def pagerank_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-basket quadratic (see co_purchase_lift_parts)."""
     from .operators.graph import pagerank
 
-    li = _t(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    ).distinct()
-    a, b = op.alias("a"), op.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")))
-        .groupBy(F.col("a.pk").alias("p1"), F.col("b.pk").alias("p2"))
-        .agg(F.count("*").alias("n_both"))
-        .filter(F.col("n_both") >= 2)
-    )
+    pairs = _copurchase_edges(_t(spark, sf_dir, "lineitem"))
     edges = pairs.select(
-        F.col("p1").alias("src"), F.col("p2").alias("dst")
-    ).unionAll(pairs.select(F.col("p2").alias("src"), F.col("p1").alias("dst")))
+        F.col("pa").alias("src"), F.col("pb").alias("dst")
+    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
     ranks = pagerank(edges, damping=0.85, iterations=6)
     return (
         ranks.select(
@@ -8135,18 +8117,8 @@ def cross_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the winnowing/LSH operators use."""
     d = _t(spark, sf_dir, "documents")
     fps = d.select("source", F.md5("text").alias("fp")).distinct()
-    a, b = fps.alias("a"), fps.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.source") < F.col("b.source")),
-        )
-        .groupBy(
-            F.col("a.source").alias("source_a"),
-            F.col("b.source").alias("source_b"),
-        )
-        .agg(F.count("*").alias("n_shared"))
+    return DD.shared_key_pairs(fps, "source", ["fp"]).toDF(
+        "source_a", "source_b", "n_shared"
     )
 
 
@@ -10340,11 +10312,8 @@ def degree_distribution_copurchase(spark: SparkSession, sf_dir: str) -> DataFram
     op = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
     ).distinct()
-    a, b = op.alias("a"), op.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.ok") == F.col("b.ok")) & (F.col("a.pk") < F.col("b.pk")))
-        .select(F.col("a.pk").alias("p1"), F.col("b.pk").alias("p2"))
-        .distinct()
+    pairs = DD.shared_key_pairs(op, "pk", ["ok"]).select(
+        F.col("id_a").alias("p1"), F.col("id_b").alias("p2")
     )
     deg = (
         pairs.select(F.col("p1").alias("pk"))
@@ -10615,19 +10584,8 @@ def event_type_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     tu = ev.select("event_type", "user_id").distinct()
     sizes = tu.groupBy("event_type").agg(F.count("*").alias("n"))
-    a = tu.alias("a")
-    b = tu.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count("*").alias("n_common"))
+    inter = DD.shared_key_pairs(tu, "event_type", ["user_id"]).toDF(
+        "type_a", "type_b", "n_common"
     )
     sa = sizes.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a"))
     sb = sizes.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b"))

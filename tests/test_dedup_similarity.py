@@ -25,6 +25,7 @@ from local_data_pipeline_spark.operators.dedup import (
 from local_data_pipeline_spark.operators.similarity import (
     _bucket_col,
     brute_force_topk,
+    brute_force_topk_arrow,
     lsh_topk,
 )
 
@@ -194,6 +195,25 @@ def test_brute_force_topk_hand_computed(spark):
     cos1 = round(0.9 / math.hypot(0.9, 0.1), 6)
     cos3 = round(0.7 / (math.hypot(0.7, 0.7)), 6)
     assert got == [(1, cos1, 1), (3, cos3, 2), (2, 0.0, 3)]
+
+
+def test_exact_cosine_searches_agree_on_a_zero_vector(spark):
+    """A zero-norm vector has no cosine. Both exact searches drop it: it
+    is nobody's neighbor and, as a query, gets no rows (the JVM search
+    used to divide by its zero norm and fail under ANSI mode)."""
+    vecs = [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 1.0]), (4, [0.0, 0.0])]
+    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+    rows = {
+        name: sorted(tuple(r) for r in search(df, df, k=3).collect())
+        for name, search in (
+            ("jvm", brute_force_topk),
+            ("arrow", brute_force_topk_arrow),
+        )
+    }
+    assert rows["jvm"] == rows["arrow"]
+    assert {r[0] for r in rows["jvm"]} == {1, 2, 3}
+    assert {r[1] for r in rows["jvm"]} == {1, 2, 3}
+    assert [r[1] for r in rows["jvm"] if r[0] == 1] == [2, 3]
 
 
 def test_lsh_topk_recall_against_brute_force(spark, sf_dir):

@@ -604,6 +604,8 @@ def test_sparse_cosine_salts_hot_postings(spark):
         "attribution_linear_events",
         "attribution_time_decay_events",
         "forget_impact_report",
+        "co_purchase_lift_parts",
+        "event_type_user_overlap",
     ],
 )
 def test_join_conditions_never_compare_a_column_with_itself(spark, monkeypatch, name):
